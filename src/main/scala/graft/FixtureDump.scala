@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Golden-fixture provenance dump (see FIXTURES.md): writes, for each
   * model-scored registry query, (a) the model weights as the text artifact
@@ -16,14 +15,7 @@ import org.apache.spark.sql.SparkSession
 object FixtureDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
     // Touch the registry before any QueriesPipeline member: the shared
     // helpers live in Queries, whose initializer must run first.

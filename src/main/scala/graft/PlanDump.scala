@@ -14,14 +14,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val tag = args(1)
     val sfDir = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.length > 3) args.drop(3).toSeq else SparkEntry.queries.keys.toSeq

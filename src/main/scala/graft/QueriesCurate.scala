@@ -31,8 +31,9 @@ private[graft] object QueriesCurate {
   // the family the production path runs still finds the same near-dups).
   // Measured at sf0.001/sf0.01: the two pair sets are IDENTICAL, so the
   // 0.8 pair-set-Jaccard floor and est≥0.9 strong-recall checks have full
-  // margin. The isolated xxhash-vs-md5 primitive cost stays measured by
-  // HashBench; this row's bench time now covers both pipelines.
+  // margin. The isolated xxhash-vs-md5 primitive cost is recorded in
+  // SCALE.md ("Production hash family", bench_hash_r15.json); this row's
+  // bench time now covers both pipelines.
   private val d49: (String, QFn, Option[String]) = ("d49_minhash_xxhash",
     (s, d) => Dedup.hashFamilyAudit(docs(s, d), "doc_id", "text", n = 3,
       k = MINHASH_K, bands = MINHASH_BANDS,

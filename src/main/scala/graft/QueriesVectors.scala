@@ -2236,8 +2236,9 @@ private[graft] object QueriesVectors {
     * indexed corpus via [[adaptiveTowerBits]] (the d73 self-tuning
     * move) and add a per-bucket posting cap (the Dedup.docShingles
     * hot-key move). Identical vectors share any width, so aligned
-    * pairs always stay candidates. XModalBench measures the knob. */
-  private[graft] def towerBucket(vec: Column, bits: Int = 6): Column =
+    * pairs always stay candidates. The width sweep is recorded in
+    * SCALE.md (round-15 decade rows, bench_xmodal_r15/r16.json). */
+  private[graft] def towerBucket(vec: Column, bits: Int): Column =
     (0 until bits).map(b =>
       when(element_at(vec, b + 1) > 128L, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ + _)
@@ -2264,8 +2265,8 @@ private[graft] object QueriesVectors {
     * ⌈log₂ m⌉ of the same integer m). One cheap count() derives it —
     * the d73 one-scalar-pull precedent. 500 docs → 6 bits (the r15
     * registered width, so graded-scale results are unchanged); 50k
-    * docs → 12 bits, the width XModalBench measured at 59× fewer
-    * candidates / 6.3× faster. */
+    * docs → 12 bits, the width SCALE.md records at 59× fewer
+    * candidates / 6.3× faster (round-15 decade rows). */
   private[graft] def adaptiveTowerBits(n: Long): Int = {
     // ceil(n / target) in the overflow-free (n-1)/t + 1 form: counts up
     // to Long.MaxValue clamp to 16 instead of wrapping negative
@@ -2321,10 +2322,6 @@ private[graft] object QueriesVectors {
       .withColumn("in2", towerNorm2(col("ivec")))
   }
 
-  private[graft] def imageTower(docsDf: DataFrame,
-                                bucketBits: Int = 6): DataFrame =
-    imageTowerFromDims(towerDims(docsDf), bucketBits)
-
   /** Text tower over a dims frame: (txt_id, tvec, tbucket, tn2) with NO
     * codec — a stateless per-row map, so it runs unchanged on a
     * document STREAM (the s22 serving shape). */
@@ -2334,10 +2331,6 @@ private[graft] object QueriesVectors {
       .select(col("doc_id").as("txt_id"), col("tvec"))
       .withColumn("tbucket", towerBucket(col("tvec"), bucketBits))
       .withColumn("tn2", towerNorm2(col("tvec")))
-
-  private[graft] def textTower(docsDf: DataFrame,
-                               bucketBits: Int = 6): DataFrame =
-    textTowerFromDims(towerDims(docsDf), bucketBits)
 
   /** Scored candidate pairs — the shared core of the curation report
     * (c05/s22), the retrieval eval (c07) and the cross-modal dedup
@@ -2379,25 +2372,19 @@ private[graft] object QueriesVectors {
       .withColumnRenamed("in2", "_in2").withColumnRenamed("tn2", "_tn2")
   }
 
-  private[graft] def crossModalScored(
-      textDocs: DataFrame, imgDocs: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame =
-    crossModalScoredDims(towerDims(textDocs), towerDims(imgDocs),
-      bucketBits, maxPostings)
-
   /** Adaptive-width entry point — the registered c05/s22 behavior: ONE
     * cheap count of the indexed image corpus picks the bucket width
     * ([[adaptiveTowerBits]]); works when `textDocs` streams because the
     * image side is the static index. */
   private[graft] def crossModalScored(textDocs: DataFrame,
                                       imgDocs: DataFrame): DataFrame =
-    crossModalScored(textDocs, imgDocs, adaptiveTowerBits(imgDocs.count()))
+    crossModalScoredDims(towerDims(textDocs), towerDims(imgDocs),
+      adaptiveTowerBits(imgDocs.count()))
 
-  private[graft] def crossModalReport(
-      textDocs: DataFrame, imgDocs: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame = {
+  private[graft] def crossModalReport(textDocs: DataFrame,
+                                      imgDocs: DataFrame): DataFrame = {
     val score = col("_score")
-    crossModalScored(textDocs, imgDocs, bucketBits, maxPostings)
+    crossModalScored(textDocs, imgDocs)
       .withColumn("_kept", (score >= 0.8).cast("long"))
       .withColumn("_aligned", (col("doc_id") === col("txt_id")).cast("long"))
       .groupBy(col("source")).agg(
@@ -2408,10 +2395,6 @@ private[graft] object QueriesVectors {
       .withColumn("kept_rate", round(
         col("n_kept").cast("double") / col("n_pairs").cast("double"), 6))
   }
-
-  private[graft] def crossModalReport(textDocs: DataFrame,
-                                      imgDocs: DataFrame): DataFrame =
-    crossModalReport(textDocs, imgDocs, adaptiveTowerBits(imgDocs.count()))
 
   /** The tower-candidate CTE chain ending at `p` (scored pairs),
     * shared by c05/s22/c07/c08 — adaptive width (`bits` CTE over the

@@ -49,14 +49,7 @@ object ScaleData {
     // optional 4th arg: comma-separated table subset (e.g.
     // "documents,embeddings" for the cheap 100x cross-modal fixture)
     val tables = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     build(spark, src, out, copies, tables)
     spark.stop()
   }

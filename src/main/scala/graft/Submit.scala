@@ -37,14 +37,7 @@ object Submit {
     require(args.length >= 2,
       "usage: graft.Submit <transactions.csv> <output.csv> [model.txt]")
     val (inCsv, outCsv) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Artifact type dispatch: a `seqmodel` header selects the RNN branch
     // (model.py predict contract), anything else the tree branch
     // (run.py CatBoost contract). Same two-arg CLI either way.

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Training, TreeEnsembleModel}
 import graft.Queries._
@@ -25,14 +24,7 @@ object Train {
     val sfDir = args(0)
     val outPath = args(1)
     val iterations = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // Force graft.Queries clinit before any sub-registry: the sub-registries
     // import Queries._, so first-touching QueriesPipeline re-enters Queries

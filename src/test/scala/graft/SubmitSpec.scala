@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.pipeline.{SequenceModel, TreeEnsembleModel, TreeLeaf, TreeSplit}
 import graft.schema.Tables
 
@@ -30,6 +31,12 @@ class SubmitSpec extends SparkSpec {
     f.getAbsolutePath
   }
 
+  /** User 1 scores; user 2 holds only 6012 rows and falls back. */
+  private val scoredAndVanished =
+    (1 to 30).map(i => s"1,5411,48,${10 + i}.0,${ts(i)}") ++
+    (1 to 30).map(i => s"1,5812,48,${5 + i}.0,${ts(30 + i)}") ++
+    (1 to 5).map(i => s"2,6012,48,99.0,${ts(100 + i)}")
+
   test("Submit.run scores users, drops 6012, falls back vanished users") {
     // user 1: 30×5411 (amt 11..40) then 30×5812, strictly increasing ts —
     // trim(20) keeps exactly rows 21..40 = ten 5411 + ten 5812.
@@ -37,11 +44,7 @@ class SubmitSpec extends SparkSpec {
     // [P(1/3), P(2/3)] of 11..40 ≈ [20.67, 30.33], so the kept 5411 amounts
     // (31..40) all repair to the median 25.5 -> proc_5411 = 255.
     // user 2: ONLY 6012 rows -> trimmed+dropped away -> max-score fallback.
-    val rows =
-      (1 to 30).map(i => s"1,5411,48,${10 + i}.0,${ts(i)}") ++
-      (1 to 30).map(i => s"1,5812,48,${5 + i}.0,${ts(30 + i)}") ++
-      (1 to 5).map(i => s"2,6012,48,99.0,${ts(100 + i)}")
-    val in = csvOf(rows)
+    val in = csvOf(scoredAndVanished)
     val out = Submit.run(spark, in, model).collect()
 
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L), "user-sorted output")
@@ -51,6 +54,42 @@ class SubmitSpec extends SparkSpec {
     // user 2 vanished -> carries the max target (here: user 1's score)
     assert(byUser(2L) == byUser(1L), "fallback is max of scored targets")
     rmTree(new java.io.File(in).getParentFile)
+  }
+
+  test("graft.Submit main in a child JVM writes the in-process CSV") {
+    // the CLI entry point itself: argument dispatch, LocalSession, CSV
+    // write and stop, in a fresh JVM on this JVM's classpath and
+    // --add-opens flags, with the same core count as the spec session
+    val in = csvOf(scoredAndVanished)
+    val dir = new java.io.File(in).getParentFile
+    val modelTxt = new java.io.File(dir, "model.txt")
+    Files.writeString(modelTxt.toPath,
+      TreeEnsembleModel.toLines(model).mkString("", "\n", "\n"))
+    val (cliOut, libOut) = (s"$dir/cli", s"$dir/lib")
+    val log = new java.io.File(dir, "cli.log")
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
+      addOpens ++ Seq("-cp", sys.props("java.class.path"), "graft.Submit",
+        in, cliOut, modelTxt.getPath)
+    val pb = new ProcessBuilder(cmd.asJava)
+      .redirectErrorStream(true).redirectOutput(log)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val rc = pb.start().waitFor()
+    assert(rc == 0, s"exit $rc:\n" +
+      Files.readAllLines(log.toPath).asScala.takeRight(30).mkString("\n"))
+
+    Tables.writeCsv(Submit.run(spark, in, model), libOut, singleFile = true)
+    def csvPart(out: String): Array[Byte] = {
+      val parts = new java.io.File(out).listFiles
+        .filter(_.getName.endsWith(".csv"))
+      assert(parts.length == 1, s"$out must hold one csv part")
+      Files.readAllBytes(parts.head.toPath)
+    }
+    val (cli, lib) = (csvPart(cliOut), csvPart(libOut))
+    assert(cli.sameElements(lib), s"CLI:\n${new String(cli, "UTF-8")}" +
+      s"\nin-process:\n${new String(lib, "UTF-8")}")
+    rmTree(dir)
   }
 
   test("submission CSV sink: single part, header, user-sorted") {

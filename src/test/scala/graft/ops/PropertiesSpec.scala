@@ -444,8 +444,8 @@ class PropertiesSpec extends SparkSpec {
     assert(adaptiveTowerBits(500L) == 6)
     assert(adaptiveTowerBits(625L) == 6) // c07's distractor corpus
     assert(adaptiveTowerBits(5000L) == 9) // bench sf0.1
-    // the 10x corpus lands exactly on the width XModalBench measured
-    // at 59x fewer candidates / 6.3x faster
+    // the 10x corpus lands exactly on the width SCALE.md records
+    // (round-15 decade rows) at 59x fewer candidates / 6.3x faster
     assert(adaptiveTowerBits(50000L) == 12)
     // clamps
     assert(adaptiveTowerBits(1L) == 6)
