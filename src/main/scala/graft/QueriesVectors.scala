@@ -2337,30 +2337,24 @@ private[graft] object QueriesVectors {
     * (c08): (txt_id, doc_id = image, source, _score) with the
     * exact-integer-dot / one-IEEE-divide cosine, plus the exact integer
     * terms (_dot, _in2, _tn2) c08's parallel test reads. Candidates
-    * ride the bucket equi-join with the hot-bucket cap applied on the
-    * image (index) side — a dropped bucket starves its text rows of
-    * partners, which is exactly the Dedup.docShingles drop-the-key
-    * semantics. `textDims` may come from a STREAMING frame. */
+    * ride the bucket equi-join with the [[TOWER_MAX_POSTINGS]] hot-bucket
+    * cap applied on the image (index) side — a dropped bucket starves its
+    * text rows of partners, which is exactly the Dedup.docShingles
+    * drop-the-key semantics. `textDims` may come from a STREAMING frame. */
   private[graft] def crossModalScoredDims(
-      textDims: DataFrame, imgDims: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame = {
-    val img0 = imageTowerFromDims(imgDims, bucketBits)
-    val imgOk =
-      if (maxPostings <= 0L) img0
-      else {
-        // the hot-bucket cap consumes the tower TWICE — once under the
-        // depth histogram, once as the join's index side — and nothing
-        // between them is an exchange, so the codec mapPartitions pass
-        // re-executed per consumer (measured r18: two full tower builds
-        // inside every scored materialization). The image side is always
-        // the STATIC index (only textDims may stream — s22), so an eager
-        // weak-ref checkpoint materializes the codec once (the s25
-        // corpusTower idiom); tiny: n_img rows × (16 longs + ids).
-        val img = img0.localCheckpoint(true)
-        val hot = img.groupBy(col("ibucket")).count()
-          .filter(col("count") > maxPostings).select(col("ibucket"))
-        img.join(hot, Seq("ibucket"), "left_anti")
-      }
+      textDims: DataFrame, imgDims: DataFrame, bucketBits: Int): DataFrame = {
+    // the hot-bucket cap consumes the tower TWICE — once under the depth
+    // histogram, once as the join's index side — and nothing between them
+    // is an exchange, so the codec mapPartitions pass re-executed per
+    // consumer (measured r18: two full tower builds inside every scored
+    // materialization). The image side is always the STATIC index (only
+    // textDims may stream — s22), so an eager weak-ref checkpoint
+    // materializes the codec once (the s25 corpusTower idiom); tiny:
+    // n_img rows × (16 longs + ids).
+    val img = imageTowerFromDims(imgDims, bucketBits).localCheckpoint(true)
+    val hot = img.groupBy(col("ibucket")).count()
+      .filter(col("count") > TOWER_MAX_POSTINGS).select(col("ibucket"))
+    val imgOk = img.join(hot, Seq("ibucket"), "left_anti")
     val pairs = textTowerFromDims(textDims, bucketBits)
       .join(imgOk, col("tbucket") === col("ibucket"))
     val dot = graft.functions.CenteredDotLong(col("ivec"), col("tvec"), 128L)
