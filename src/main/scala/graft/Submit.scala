@@ -23,10 +23,14 @@ import graft.schema.Tables
   * `TreeEnsembleModel.fromSparkML` + `toLines`) retargets the whole CLI
   * without a rebuild: `graft.Submit in.csv out.csv /path/to/model.txt`.
   *
-  * Scale shape: one scan of the CSV, one shuffle on user_id (the fused
-  * feature matrix), scoring as a codegen projection, and the fallback join
-  * broadcast — the reference's per-user Python loop (`run.py:35-80`)
-  * becomes three distributed stages.
+  * Scale shape: one scan of the CSV and one shuffle on user_id (the
+  * cleaning's windows), which the feature matrix reuses — a
+  * whole-partition window for the time stats and the two-level
+  * [[graft.ops.Pivots.pivotWide]], O(1) work per row at the 309-code MCC
+  * width; scoring as a codegen projection, run once and materialised
+  * ahead of its three fallback consumers; the fallback join broadcast —
+  * the reference's per-user Python loop (`run.py:35-80`) becomes three
+  * distributed stages.
   */
 object Submit {
 

@@ -76,7 +76,9 @@ object TokenOverlap {
     // is bounded by min(|a|, |b|) distinct tokens of one document
     val (small, nSmall, big, nBig) =
       if (na <= nb) (a, na, b, nb) else (b, nb, a, na)
-    val counts = new java.util.HashMap[UTF8String, Array[Long]](nSmall * 2)
+    // capacity clamp: nSmall * 2 overflows Int past 2^30 elements
+    val counts = new java.util.HashMap[UTF8String, Array[Long]](
+      math.min(nSmall, 1 << 29) * 2)
     var i = 0
     while (i < nSmall) {
       if (!small.isNullAt(i)) {

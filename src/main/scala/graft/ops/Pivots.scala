@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
  * dropped, absent ones zero-filled, and no distinct-values discovery job
  * (one fewer full scan at 100 TB).
  *
- * Implementation is CONDITIONAL AGGREGATION, not `Dataset.pivot`:
- * `agg(count(when(col === v, value)), ...)` per vocabulary entry compiles to
- * ONE hash aggregate with map-side partial combine — a single shuffle on the
- * grouping key. Spark's generic `pivot(col, values)` plans two exchanges
- * (groupBy(key, pivotCol) then pivotfirst over key); with a known vocab the
- * second pass is pure overhead.
+ * Two shapes, chosen by vocabulary width:
+ *  - small vocab (the A1-A3 operators [[pivotCount]] / [[pivotSum]]):
+ *    CONDITIONAL AGGREGATION, not `Dataset.pivot` —
+ *    `agg(count(when(col === v, value)), ...)` per vocabulary entry compiles
+ *    to ONE hash aggregate with map-side partial combine, a single shuffle
+ *    on the grouping key. Spark's generic `pivot(col, values)` plans two
+ *    exchanges (groupBy(key, pivotCol) then pivotfirst over key); with a
+ *    known vocab the second pass is pure overhead.
+ *  - reference width (hundreds of codes, [[pivotWide]]): every row of the
+ *    conditional form evaluates all |vocab| `when`s and the aggregate
+ *    carries a |vocab|-slot buffer, so the wide matrices (the Submit
+ *    feature matrix among them) go two-level instead: O(1) work per row.
  */
 object Pivots {
 
@@ -77,11 +83,19 @@ object Pivots {
     *      projection that `methodSplitThreshold` splits into many small
     *      methods, keeping whole-stage codegen ON at any width.
     * Unseen vocab entries coalesce to the family's `fill`; codes outside
-    * the vocab are dropped by the final projection (closed world, P8). */
+    * the vocab are dropped by the final projection (closed world, P8).
+    *
+    * `carried` names columns that are constant within each key (per-key
+    * window aggregates, e.g. the feature matrix's `td_mean`/`td_std`):
+    * `max` carries them through both levels unchanged, and they follow the
+    * family columns in the output. Keys whose every code is null or out of
+    * vocab still get a row (fills plus their carried values). */
   def pivotWide(df: DataFrame, key: String, pivotCol: String,
-                vocab: Seq[String], families: Seq[Family]): DataFrame = {
+                vocab: Seq[String], families: Seq[Family],
+                carried: Seq[String] = Nil): DataFrame = {
     require(families.nonEmpty)
-    val cellAggs = families.map(f => f.agg.as(s"_v_${f.prefix}"))
+    val carry = carried.map(c => max(col(c)).as(c))
+    val cellAggs = families.map(f => f.agg.as(s"_v_${f.prefix}")) ++ carry
     val cells = df.groupBy(col(key), col(pivotCol))
       .agg(cellAggs.head, cellAggs.tail: _*)
     // pivotCol.isNotNull: a null code with a non-null aggregate would put a
@@ -92,11 +106,12 @@ object Pivots {
       map_from_entries(collect_list(when(
         col(pivotCol).isNotNull && col(s"_v_${f.prefix}").isNotNull,
         struct(col(pivotCol), col(s"_v_${f.prefix}")))))
-        .as(s"_m_${f.prefix}"))
+        .as(s"_m_${f.prefix}")) ++ carry
     val maps = cells.groupBy(col(key)).agg(mapAggs.head, mapAggs.tail: _*)
-    maps.select(col(key) +: (for (f <- families; v <- vocab) yield
+    val pivoted = for (f <- families; v <- vocab) yield
       coalesce(element_at(col(s"_m_${f.prefix}"), lit(v)), f.fill)
-        .as(s"${f.prefix}_$v")): _*)
+        .as(s"${f.prefix}_$v")
+    maps.select((col(key) +: pivoted) ++ carried.map(col): _*)
   }
 
   /** P10: integer floor-division quantization of pivot cells

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -34,7 +35,10 @@ object Pipeline {
   }
 
   /** J2: per-user feature matrix — pivot counts + pivot sums + group stats,
-    * outer-joined on the user key and zero-filled. */
+    * outer-joined on the user key and zero-filled. The reference form that
+    * [[featureMatrixFused]] must equal (PipelineSpec); the joins are
+    * null-safe, so a null user key meets itself instead of surfacing once
+    * per part. */
   def featureMatrix(cleaned: DataFrame, user: String, code: String,
                     amt: String, timeAttr: Column,
                     vocab: Seq[String]): DataFrame = {
@@ -43,47 +47,70 @@ object Pipeline {
     val st = GroupStats.stats(
       cleaned.withColumn("_t", timeAttr), Seq(user), "_t", "td")
       .select(col(user), col("td_mean"), col("td_std"))
-    freq.join(proc, Seq(user), "outer")
-      .join(st, Seq(user), "outer")
-      .na.fill(0.0)
+    val joined = Seq(proc, st).foldLeft(freq) { (l, r) =>
+      val rk = r.withColumnRenamed(user, "_k")
+      l.join(rk, l(user) <=> rk("_k"), "outer")
+        .withColumn(user, coalesce(col(user), col("_k"))).drop("_k")
+    }
+    joined.na.fill(0.0, joined.columns.filterNot(_ == user).toSeq)
   }
 
-  /** Fused single-pass feature matrix: same output as [[featureMatrix]] but
-    * every family (pivot counts, pivot sums, time stats) is computed in ONE
-    * groupBy(user) aggregation — one shuffle total instead of three
-    * aggregates plus two joins. This is SURVEY.md §4.3's "pivot fusion"
-    * delivered at the API level: the reference's 10 pivot jobs re-scanned
-    * the input 10 times (`run.py:238-424`); the J2 join shape (featureMatrix)
-    * replays its 20-way join; this is the plan you actually want at 100 TB.
-    * Column order matches featureMatrix. */
+  /** Fused feature matrix: same output as [[featureMatrix]], bit for bit,
+    * in ONE shuffle on the user key instead of three aggregates plus two
+    * joins (SURVEY.md §4.3's "pivot fusion" at the API level; the
+    * reference's 10 pivot jobs re-scanned the input 10 times,
+    * `run.py:238-424`). It is the two-level [[Pivots.pivotWide]]:
+    *   - a whole-partition `Window.partitionBy(user)` puts `td_mean` /
+    *     `td_std` on every row, and the pivot carries them per user;
+    *   - `groupBy(user, code)` computes `count(amt)` / `sum(amt)` once per
+    *     occupied cell, `groupBy(user)` folds the cells into one map per
+    *     family, and the projection reads `coalesce(map[v], 0)`.
+    * Per-row cost is O(1) at any vocab width: the conditional form (one
+    * `when` per vocab entry per row, a 620-slot buffer at the 309-code
+    * MCC width, codegen off) stays for the small-vocab A1-A3 operators.
+    * The window, both aggregates and the projection all reuse the one
+    * exchange on the user key. Bit-identity with the conditional form, on
+    * input clustered and sorted by user as the cleaning's trim window
+    * leaves it (so the window adds no sort of its own): each cell sum adds
+    * the same rows in the same order from 0.0, the window's `avg` and
+    * `stddev_samp` update over the same rows in the same order, and the
+    * conditional form's final merge into an empty buffer is exact. Column
+    * order and types match [[featureMatrix]]: `freq_*` bigint, `proc_*`
+    * double. */
   def featureMatrixFused(cleaned: DataFrame, user: String, code: String,
                          amt: String, timeAttr: Column,
                          vocab: Seq[String]): DataFrame = {
     val t = timeAttr.cast("double")
-    val n = count(t).cast("double")
-    val aggs =
-      vocab.map(v => count(when(col(code) === v, col(amt))).as(s"freq_$v")) ++
-      vocab.map(v => coalesce(sum(when(col(code) === v, col(amt))), lit(0.0))
-        .as(s"proc_$v")) ++
-      Seq(avg(t).as("td_mean"),
-        coalesce(when(n >= 2, stddev_samp(t)), lit(0.0)).as("td_std"))
-    cleaned.groupBy(col(user)).agg(aggs.head, aggs.tail: _*)
+    val w = Window.partitionBy(col(user))
+    val withTd = cleaned.select(col(user), col(code), col(amt),
+      avg(t).over(w).as("td_mean"),
+      coalesce(when(count(t).over(w) >= 2, stddev_samp(t).over(w)), lit(0.0))
+        .as("td_std"))
+    Pivots.pivotWide(withTd, user, code, vocab, Seq(
+      Pivots.Family("freq", count(col(amt)), lit(0L)),
+      Pivots.Family("proc", sum(col(amt)))),
+      carried = Seq("td_mean", "td_std"))
   }
 
-  /** P12: align to the model's demanded feature list — add zero columns for
-    * anything absent, project in model order (`run.py:470-474`). */
+  /** P12: align to the model's demanded feature list — zero columns for
+    * anything absent, projected in model order (`run.py:470-474`), in one
+    * `select` (a `withColumn` per absent column re-analyses the whole
+    * plan each time). */
   def alignFeatures(df: DataFrame, user: String,
                     modelCols: Seq[String]): DataFrame = {
-    val withAll = modelCols.foldLeft(df)((d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(0.0)))
-    withAll.select((user +: modelCols).map(col): _*)
+    val present = df.columns.toSet
+    df.select(col(user) +: modelCols.map(c =>
+      if (present(c)) col(c) else lit(0.0).as(c)): _*)
   }
 
   /** Score + fallback: users present in `allUsers` but dropped during
     * cleaning re-enter with the maximum score (`run.py:480-486`). */
   def submission(features: DataFrame, scorer: Scorer, allUsers: DataFrame,
                  user: String): DataFrame = {
+    // three consumers (union, anti-join, broadcast max): materialise once
+    // so the scorer and the feature matrix under it run once, not thrice
     val scored = scorer.score(features).select(col(user), col("target"))
+      .localCheckpoint(true)
     val vanished = allUsers.select(col(user)).distinct()
       .join(scored.select(col(user)), Seq(user), "left_anti")
     val fallback = vanished.crossJoin(

@@ -57,6 +57,76 @@ class PlanShapeSpec extends SparkSpec {
       s"expected exactly one hash exchange, found $n:\n$finalPlan")
   }
 
+  test("Submit at 309-code width: no physical aggregate over 8 functions") {
+    // the Submit spine's feature matrix at the MCC width is the two-level
+    // pivot, never one aggregate with a slot per (family, code): every
+    // aggregate in the AQE-final plans the CLI body runs stays at 8
+    // functions or fewer. The one fixed-width exception is the cleaning's
+    // Repair rank walk (count + 3 percentiles x floor/ceil/index = 10,
+    // whatever the vocab), pinned at exactly 10.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.{TreeEnsembleModel, TreeLeaf, TreeNode, TreeSplit}
+    val codes = (0 until 309).map(i => (3000 + 7 * i).toString)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_submit")
+      .toFile
+    val csv = new java.io.File(dir, "tx.csv")
+    val w = new java.io.PrintWriter(csv, "UTF-8")
+    w.println("user_id,mcc_code,currency_rk,transaction_amt,transaction_dttm")
+    for (u <- 0 until 40; i <- 0 until 60)
+      w.println(s"$u,${codes((u * 13 + i * i) % 309)},48," +
+        f"${(u * 31 + i * 17) % 500 + 0.25}%.2f,2023-01-01 " +
+        f"${i / 6}%02d:${i % 6 * 10}%02d:${u % 60}%02d")
+    w.close()
+    // 62 ten-split chains: the score reads all 620 columns, so column
+    // pruning cannot narrow the feature matrix behind the gate's back
+    val features = codes.map("freq_" + _) ++ codes.map("proc_" + _) ++
+      Seq("td_mean", "td_std")
+    val model = TreeEnsembleModel(featureNames = features, bias = 0.5,
+      trees = features.grouped(10).map(_.foldRight[TreeNode](TreeLeaf(0.01))(
+        (f, rest) => TreeSplit(f, 1.0, TreeLeaf(0.0), rest))).toSeq)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = Submit.run(spark, csv.getPath, model).collect()
+      assert(out.length == 40)
+      org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      rmTree(dir)
+    }
+    import scala.jdk.CollectionConverters._
+    val aggs = plans.asScala.toSeq.flatMap(nodes).collect {
+      case a: BaseAggregateExec => a
+    }
+    // not vacuous: the feature matrix's amount sums were among them
+    assert(aggs.exists(_.aggregateExpressions.exists { e =>
+      e.aggregateFunction.prettyName == "sum" &&
+        e.aggregateFunction.references.exists(_.name == "amt")
+    }), s"feature-matrix aggregate not captured in ${plans.size} plans")
+    val (repairWalk, rest) = aggs.partition(_.aggregateExpressions.exists(
+      _.aggregateFunction.references.exists(_.name == "_iL")))
+    assert(repairWalk.nonEmpty &&
+      repairWalk.forall(_.aggregateExpressions.size == 10))
+    val wide = rest.filter(_.aggregateExpressions.size > 8)
+    assert(wide.isEmpty, s"${wide.size} aggregates over 8 functions, e.g. " +
+      wide.headOption.map(_.simpleString(200)).getOrElse(""))
+  }
+
   test("epochShuffle: ONE hash exchange on the shard key, no range sort") {
     // the training-order shuffle must never become a global range sort
     // (whose partitioner samples the corpus) or a driver-side index —

@@ -1,30 +1,70 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.util.LongAccumulator
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private val vocab = Seq("a", "b")
 
-  test("featureMatrixFused produces the same matrix as the join form") {
-    val df = Seq(
-      (1L, "a", 10.0, 100), (1L, "a", -2.0, 200), (1L, "b", 5.0, 300),
-      (2L, "a", 7.0, 400))
-      .toDF("u", "code", "amt", "t")
+  /** featureMatrixFused's rows, after asserting they equal featureMatrix's
+    * bit for bit (`==` on boxed doubles is Double.equals), with the same
+    * column names, order and types. */
+  private def fusedEqualsJoined(df: DataFrame, vocab: Seq[String])
+  : Seq[Seq[Any]] = {
     val joined = Pipeline.featureMatrix(df, "u", "code", "amt", $"t", vocab)
     val fused = Pipeline.featureMatrixFused(df, "u", "code", "amt", $"t",
       vocab)
-    assert(joined.columns.toSeq == fused.columns.toSeq)
-    val a = joined.orderBy("u").collect().map(_.toSeq)
-    val b = fused.orderBy("u").collect().map(_.toSeq)
-    a.zip(b).foreach { case (x, y) =>
-      x.zip(y).foreach {
-        case (xv: Double, yv: Double) => assert(math.abs(xv - yv) < 1e-9)
-        case (xv, yv) => assert(xv == yv)
-      }
-    }
+    assert(fused.schema.map(f => (f.name, f.dataType)) ==
+      joined.schema.map(f => (f.name, f.dataType)))
+    val a = joined.orderBy("u").collect().map(_.toSeq).toSeq
+    val b = fused.orderBy("u").collect().map(_.toSeq).toSeq
+    assert(a.length == b.length)
+    a.zip(b).foreach { case (x, y) => assert(x == y, s"user ${x.head}") }
+    b
+  }
+
+  test("featureMatrixFused produces the same matrix as the join form") {
+    val small = Seq(
+      (1L, "a", 10.0, 100), (1L, "a", -2.0, 200), (1L, "b", 5.0, 300),
+      (2L, "a", 7.0, 400))
+      .toDF("u", "code", "amt", "t")
+    assert(fusedEqualsJoined(small, vocab).length == 2)
+
+    // the 309-code MCC width of the Submit matrix, with every edge the
+    // cleaning can leave behind: null amt, null code, codes outside the
+    // vocab, single-row users (td_std = 0) and a null user key. Fractional
+    // amounts make every cell sum order-sensitive; the input arrives as
+    // the cleaning hands it over, clustered and sorted by user (the trim
+    // window's order), so both forms fold each user's rows in one order.
+    val mcc = (0 until 309).map(i => (3000 + 7 * i).toString)
+    val rows = (0 until 3000).map { i =>
+      val u: java.lang.Long = if (i % 97 == 0) null else (i % 41).toLong
+      val code =
+        if (i % 53 == 0) null
+        else if (i % 31 == 0) "9999"
+        else mcc((i * i + 3 * i) % 309)
+      val amt: java.lang.Double =
+        if (i % 29 == 0) null else ((i * 7919) % 10007) / 7.0 - 300.0
+      (u, code, amt, (i * 4327) % 86400, i)
+    } ++ Seq[(java.lang.Long, String, java.lang.Double, Int, Int)](
+      (1000L, mcc(5), 3.3, 500, 3000), // single-row user
+      (1001L, null, 1.1, 600, 3001), // single row, null code
+      (1002L, "9999", 2.2, 700, 3002)) // single row, out-of-vocab code
+    val wide = fusedEqualsJoined(rows.toDF("u", "code", "amt", "t", "ord")
+      .coalesce(1).sortWithinPartitions("u", "ord"), mcc)
+    assert(wide.length == 45) // 41 users + the null key + 3 single-row
+    assert(wide.head.head == null, "the null user key is one row")
+    assert(wide.find(_.head == 1000L).get.last == 0.0,
+      "single-row user: td_std = 0")
+    val fused = Pipeline.featureMatrixFused(small, "u", "code", "amt", $"t",
+      vocab)
+    assert(fused.schema("freq_a").dataType.typeName == "long")
+    assert(fused.schema("proc_a").dataType.typeName == "double")
   }
 
   test("submission: dropped users re-enter with the max score, sorted") {
@@ -34,6 +74,18 @@ class PipelineSpec extends SparkSpec {
       LinearScorer(Map("f" -> 1.0)), all, "u")
       .as[(Long, Double)].collect()
     assert(sub.toSeq == Seq((1L, 2.0), (2L, 5.0), (3L, 5.0)))
+  }
+
+  test("submission runs the scorer once per feature row") {
+    val feats = (1 to 7).map(i => (i.toLong, i.toDouble)).toDF("u", "f")
+    val all = (1 to 9).map(_.toLong).toDF("u")
+    val evals = spark.sparkContext.longAccumulator("scorer_evals")
+    val sub = Pipeline.submission(feats, PipelineSpec.CountingScorer(evals),
+      all, "u").as[(Long, Double)].collect()
+    assert(sub.toSeq ==
+      (1 to 7).map(i => (i.toLong, i.toDouble)) ++ Seq((8L, 7.0), (9L, 7.0)))
+    assert(evals.value == 7L,
+      s"scorer evaluated ${evals.value} rows for 7 feature rows")
   }
 
   test("alignFeatures adds missing model columns as zeros, in order") {
@@ -149,5 +201,23 @@ class PipelineSpec extends SparkSpec {
     // and the bridged model survives the commit format
     assert(TreeEnsembleModel.fromLines(
       TreeEnsembleModel.toLines(bridged)) == bridged)
+  }
+}
+
+object PipelineSpec {
+
+  /** Scores `target = f` in an RDD pass (like SequenceScorer) and counts
+    * every row it evaluates. */
+  final case class CountingScorer(evals: LongAccumulator) extends Scorer {
+    override def score(features: DataFrame): DataFrame = {
+      val idx = features.schema.fieldIndex("f")
+      val acc = evals
+      val rdd = features.rdd.mapPartitions(_.map { r =>
+        acc.add(1L)
+        Row.fromSeq(r.toSeq :+ r.getDouble(idx))
+      })
+      features.sparkSession.createDataFrame(rdd,
+        features.schema.add("target", DoubleType))
+    }
   }
 }
