@@ -225,7 +225,7 @@ private[graft] object QueriesPipeline {
       col("event_type"), sval.as("amt"))
     val cleaned = Pipeline.clean(in, "user_id", "event_type", "amt", ord,
       Pipeline.Config(nAmt = 10, nMcc = 10, trimN = 20,
-        dropCodes = Seq("error"))).cache()
+        dropCodes = Seq("error")))
     (Pipeline.featureMatrixFused(cleaned, "user_id", "event_type",
       "amt", TimeFeatures.secondsSinceMidnight(col("ts")), vocab), e)
   }

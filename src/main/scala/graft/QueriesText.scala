@@ -27,12 +27,6 @@ object QueriesText {
 
   private[graft] val tokSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
-  // word 3-gram shingle list over the token array (empty when < 3 tokens)
-  private[graft] val shingleListSql =
-    s"""list_transform(range(1, greatest(len($tokSql) - 1, 1)),
-       | i -> array_to_string(list_slice($tokSql, i, i + 2), ' '))"""
-      .stripMargin.replaceAll("\n", "")
-
   private[graft] val shCte =
     s"""toks AS (SELECT doc_id, $tokSql AS w FROM documents),
        |sh AS (SELECT DISTINCT doc_id, s FROM (SELECT doc_id,

@@ -85,7 +85,7 @@ object Submit {
     }
     val cleaned = Pipeline.clean(in, "user_id", "code", "amt",
       Seq(col("ts")), Pipeline.Config(nAmt = 10, nMcc = 10, trimN = 20,
-        dropCodes = dropCodes)).cache()
+        dropCodes = dropCodes))
     val features = Pipeline.featureMatrixFused(cleaned, "user_id", "code",
       "amt", TimeFeatures.secondsSinceMidnight(col("ts")), vocab)
     (tx, in, features)

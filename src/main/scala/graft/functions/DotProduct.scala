@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSessionExtensions
 
 /**
  * Native Catalyst expression: dot product of two numeric arrays with strict
@@ -111,61 +111,25 @@ object DotProduct {
       ColumnShim.expression(a), ColumnShim.expression(b)))
 }
 
-/** SparkSessionExtensions hook: registers `dot_product(a, b)` and
-  * `minhash_sigs(arr, k)` for SQL use and the
-  * [[graft.plans.DotProductRewrite]] optimizer rule (HOF pattern →
-  * native expression). Enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions`, or
-  * `GraftExtensions.register(spark)` on an already-built session. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-      GraftExtensions.info,
-      GraftExtensions.builder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"),
-      GraftExtensions.mhInfo,
-      GraftExtensions.mhBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler"),
-      GraftExtensions.jwInfo,
-      GraftExtensions.jwBuilder))
-    ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.PivotFusion)
-  }
-}
-
+/** SQL names for the native expressions: `dot_product(a, b)`,
+  * `minhash_sigs(arr, k)` and `jaro_winkler(a, b)`. The Column API needs
+  * no registration (`DotProduct(a, b)` etc.); SQL text does, through
+  * [[GraftExtensions.register]] on the session. */
 object GraftExtensions {
-  private[graft] val info =
-    new ExpressionInfo(classOf[DotProduct].getName, "dot_product")
-  private[graft] val builder: Seq[Expression] => Expression =
-    children => DotProduct(children(0), children(1))
-  private[graft] val mhInfo =
-    new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs")
-  private[graft] val mhBuilder: Seq[Expression] => Expression = children => {
-    val k = children(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, t)
-        if t == IntegerType => v
-      case _ => throw new IllegalArgumentException(
-        "minhash_sigs(arr, k): k must be an integer literal")
-    }
-    MinHashSigs(children(0), k)
-  }
-
-  private[graft] val jwInfo =
-    new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler")
-  private[graft] val jwBuilder: Seq[Expression] => Expression =
-    children => JaroWinklerSim(children(0), children(1))
-
-  /** Register on an existing session (extensions config only affects
-    * sessions built afterwards). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftshim.ColumnShim.registerFunction(
-      spark, "dot_product", info, builder)
-    org.apache.spark.sql.graftshim.ColumnShim.registerFunction(
-      spark, "minhash_sigs", mhInfo, mhBuilder)
-    org.apache.spark.sql.graftshim.ColumnShim.registerFunction(
-      spark, "jaro_winkler", jwInfo, jwBuilder)
+  /** Register the three SQL functions on `spark`'s function registry. */
+  def register(spark: SparkSession): Unit = {
+    def reg(name: String, cls: Class[_],
+            build: Seq[Expression] => Expression): Unit =
+      ColumnShim.registerFunction(spark, name,
+        new ExpressionInfo(cls.getName, name), build)
+    reg("dot_product", classOf[DotProduct], c => DotProduct(c(0), c(1)))
+    reg("minhash_sigs", classOf[MinHashSigs], c => MinHashSigs(c(0),
+      c(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case _ => throw new IllegalArgumentException(
+          "minhash_sigs(arr, k): k must be an integer literal")
+      }))
+    reg("jaro_winkler", classOf[JaroWinklerSim],
+      c => JaroWinklerSim(c(0), c(1)))
   }
 }

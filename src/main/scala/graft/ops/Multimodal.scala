@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
@@ -56,15 +55,6 @@ object Multimodal {
     (a, sq)
   }
 
-  /** Media asset schema: opaque payload + typed metadata. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
-
   /** Declarative metadata extraction over the opaque payload — byte length
     * and a content digest; pure projections, no decode needed. */
   def withPayloadMeta(df: DataFrame, payloadCol: String): DataFrame =
@@ -83,18 +73,6 @@ object Multimodal {
       (c % lit(997L)).cast("double"),
       (c % lit(251L)).cast("double"),
       (c % lit(127L)).cast("double"))
-  }
-
-  /** Frame sampling stub for video-like payloads: deterministic byte-offset
-    * samples standing in for frame grabs — crc32 of `k` evenly spaced
-    * single-byte slices. Real impl: seek+decode at the same offsets. */
-  def sampleFramesStub(payload: Column, k: Int): Column = {
-    val n = octet_length(payload)
-    transform(sequence(lit(0), lit(k - 1)), i => {
-      val off = (i * (n - 1) / lit(math.max(k - 1, 1))) + 1
-      when(n > 0, crc32(payload.substr(off, lit(1))).cast("double"))
-        .otherwise(lit(0.0))
-    })
   }
 
   /** Per-partition batched "decode" over a TYPED Dataset — the batch shape a

@@ -12,11 +12,13 @@ import graft.ops._
  * (J3/J4/U1) → ordered sink (O1).
  *
  * Where the reference writes the cleaned table to CSV and re-reads it twice
- * (`run.py:84-90`, operator S3), `clean` returns a cacheable DataFrame — one
- * `.cache()` call replaces the disk round-trip and both downstream branches
- * share the scan. Everything stays one lazy Catalyst plan per sink; all
- * per-user stages are co-partitioned on the user key, so the exchange
- * introduced by the first groupBy is reused by every later join/window.
+ * (`run.py:84-90`, operator S3), `clean` returns a lazy DataFrame with no
+ * disk round-trip. The fused feature matrix is its only reader, so it is
+ * not cached; the scored frame is materialised once in [[submission]],
+ * ahead of its three consumers. Everything stays one lazy Catalyst plan
+ * per sink; all per-user stages are co-partitioned on the user key, so the
+ * exchange introduced by the first groupBy is reused by every later
+ * join/window.
  */
 object Pipeline {
 

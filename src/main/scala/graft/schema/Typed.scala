@@ -20,7 +20,6 @@ object Typed {
   case class Doc(doc_id: Long, text: String, lang: String,
                  source: String, n_chars: Long)
   case class Embedding(vec_id: Long, embedding: Seq[Float], label: Int)
-  case class UserSequence(user_id: Long, seq: Seq[Seq[Double]])
 
   def events(spark: SparkSession, sfDir: String): Dataset[Event] = {
     import spark.implicits._
@@ -36,16 +35,5 @@ object Typed {
   def embeddings(spark: SparkSession, sfDir: String): Dataset[Embedding] = {
     import spark.implicits._
     Tables.embeddings(spark, sfDir).as[Embedding]
-  }
-
-  /** Typed view of the E2 tensor assembly output. */
-  def userSequences(spark: SparkSession, sfDir: String, n: Int)
-  : Dataset[UserSequence] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    graft.ops.Sequences.assembleSequences(
-      Tables.events(spark, sfDir), n, Seq("user_id"),
-      struct(col("ts"), col("event_id")), Seq("value"))
-      .as[UserSequence]
   }
 }

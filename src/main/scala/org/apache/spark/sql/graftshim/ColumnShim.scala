@@ -12,8 +12,7 @@ object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a function on an EXISTING session (SparkSessionExtensions
-    * only applies to sessions built after configuration). */
+  /** Register a SQL function on an already-built session. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession,
                        name: String,
                        info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,

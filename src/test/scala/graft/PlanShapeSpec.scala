@@ -462,39 +462,6 @@ class PlanShapeSpec extends SparkSpec {
       s"bm25 scoring should never sort-merge:\n$plan")
   }
 
-  test("PivotFusion: composed three-family pivot matrix = one exchange, one scan") {
-    // the §4.3 fusion rule on the real events table: count + sum + stats
-    // families composed by user-key joins collapse to ONE aggregate —
-    // one parquet scan, one hash exchange, zero joins, at any vocab width
-    import graft.ops.Pivots
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.PivotFusion
-    try {
-      val e = Tables.events(spark, sf)
-      val q = Pivots.pivotCount(e, "user_id", "event_type",
-          Tables.eventTypeVocab, "value", "freq")
-        .join(Pivots.pivotSum(e, "user_id", "event_type",
-          Tables.eventTypeVocab, "value", "amt"), Seq("user_id"))
-        .join(e.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"), avg(col("value")).as("v_mean")),
-          Seq("user_id"))
-      q.collect()
-      // AQE toString appends the initial plan after the final one — count
-      // the final section only (same convention as the trim-spine test)
-      val plan = q.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      val exchanges = plan.linesIterator
-        .count(_.contains("Exchange hashpartitioning"))
-      val scans = plan.linesIterator.count(_.contains("Scan parquet"))
-      val joins = plan.linesIterator.count(_.contains("Join"))
-      assert(exchanges == 1 && scans == 1 && joins == 0,
-        s"exchanges=$exchanges scans=$scans joins=$joins:\n$plan")
-    } finally {
-      spark.experimental.extraOptimizations = spark.experimental
-        .extraOptimizations.filterNot(_ == graft.plans.PivotFusion)
-    }
-  }
-
   test("session_window sessionizes in ONE exchange on the user key") {
     // s11's scale claim: the native session operator needs exactly one
     // corpus-sized shuffle (hash on the session/user keys) — no global

@@ -61,6 +61,33 @@ class PipelineSpec extends SparkSpec {
     assert(wide.head.head == null, "the null user key is one row")
     assert(wide.find(_.head == 1000L).get.last == 0.0,
       "single-row user: td_std = 0")
+
+    // Pipeline.clean's own output, uncached, across two shuffle
+    // partitions: the fused matrix reads the layout the trim window leaves
+    // (each partition clustered by user, sorted by event order) with no
+    // cache in between. Users 0-5 have 45-230 rows, so rows survive the
+    // 20-row head/tail trim; user 6 has 30 and vanishes. One-off `r*`
+    // codes are repaired to the modal code, `z` stays outside the vocab
+    // and `x` is dropped.
+    val codes = Seq("a", "b", "c", "d", "z", "x")
+    val events = for {
+      u <- 0 until 7
+      j <- 0 until (if (u == 6) 30 else 45 + 37 * u)
+    } yield (u.toLong,
+      if (j % 17 == 0) s"r$j" else codes((u * 7 + j * j) % codes.length),
+      ((u * 7919 + j * 104729) % 10007) / 7.0 - 300.0,
+      (j * 4327 + u) % 86400, j)
+    // AQE would coalesce this small input's two partitions into one
+    val merge = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(merge, "false")
+    try {
+      val cleaned = Pipeline.clean(
+        events.toDF("u", "code", "amt", "t", "ord").repartition(3),
+        "u", "code", "amt", Seq($"ord"), Pipeline.Config(dropCodes = Seq("x")))
+      assert(cleaned.rdd.getNumPartitions == 2)
+      val trimmed = fusedEqualsJoined(cleaned, Seq("a", "b", "c", "d"))
+      assert(trimmed.map(_.head) == (0L until 6L))
+    } finally spark.conf.unset(merge)
     val fused = Pipeline.featureMatrixFused(small, "u", "code", "amt", $"t",
       vocab)
     assert(fused.schema("freq_a").dataType.typeName == "long")
