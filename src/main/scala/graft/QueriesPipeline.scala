@@ -516,7 +516,7 @@ private[graft] object QueriesPipeline {
   // from the SAME artifact — leaf sums are literal doubles in a fixed
   // order, so the score is exact in both engines.
   private lazy val treeModel =
-    TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    TreeEnsembleModel.fromFile("/graft/tree_model.txt")
   /** The q37 per-user feature-matrix CTE (`fm`), shared with the training
     * lifecycle rows in [[QueriesTrain]] — ONE SQL twin of
     * Pipeline.featureMatrixFused. */

@@ -55,7 +55,7 @@ private[graft] object QueriesTrain {
   // double-exact (integer ranks, half-integer tie corrections), so the
   // ratio is bit-stable across engines.
   private lazy val scoringModel =
-    TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    TreeEnsembleModel.fromFile("/graft/tree_model.txt")
   private val q89: (String, QFn, Option[String]) = ("q89_cv_auc",
     (s, d) => {
       val aligned = Pipeline.alignFeatures(QueriesPipeline.fmDf(s, d),
@@ -91,7 +91,7 @@ private[graft] object QueriesTrain {
   // trained trees as CASE chains from the SAME artifact, so a regression
   // in either the bridge or the feature alignment hash-fails.
   private lazy val trainedModel =
-    TreeEnsembleModel.fromResource("/graft/trained_gbt.txt")
+    TreeEnsembleModel.fromFile("/graft/trained_gbt.txt")
   // Try-guarded oracle: during the bootstrap window (graft.Train must RUN
   // once before the artifact exists to commit) registry construction must
   // not crash — the row degrades to rows-only, loudly, until the artifact

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Bucketize, Sequences, TimeFeatures}
-import graft.pipeline.{LatentEncoderModel, LatentTransformer, Pipeline,
-  SequenceModel, SequenceScorer, TreeEnsembleModel, TreeEnsembleScorer,
-  VraeFeatures}
+import graft.pipeline.{Artifact, LatentEncoderModel, LatentTransformer,
+  Pipeline, SequenceModel, SequenceScorer, TreeEnsembleModel,
+  TreeEnsembleScorer, VraeFeatures}
 import graft.schema.Tables
 
 /** Standalone CLI replicating the reference's two-arg submission contract
@@ -38,30 +38,29 @@ object Submit {
   val DefaultDropCodes: Seq[String] = Seq("6012")
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: graft.Submit <transactions.csv> <output.csv> [model.txt]")
+    require(args.length >= 2 && args.length <= 4, "usage: graft.Submit " +
+      "<transactions.csv> <output.csv> [model.txt [latent_encoder.txt]]")
     val (inCsv, outCsv) = (args(0), args(1))
-    val spark = LocalSession()
-    // Artifact type dispatch: a `seqmodel` header selects the RNN branch
-    // (model.py predict contract), anything else the tree branch
-    // (run.py CatBoost contract). Same two-arg CLI either way.
-    val result = (args.lift(2), args.lift(3)) match {
-      case (Some(p), _) if SequenceModel.isSequenceArtifact(p) =>
-        runSeq(spark, inCsv, SequenceModel.fromFile(p))
-      case (Some(p), Some(v)) =>
-        // a 4th argument is an explicit request for the latent branch —
-        // a wrong/corrupt encoder must fail LOUD here, not fall through
-        // to the plain tree branch and silently score z_* as zero-fill
-        require(LatentEncoderModel.isLatentArtifact(v),
-          s"4th argument is not a latent encoder artifact " +
-            s"(expected a 'latentmodel' header): $v")
-        runWithLatent(spark, inCsv, TreeEnsembleModel.fromFile(p),
-          LatentEncoderModel.fromFile(v))
-      case (Some(p), None) => run(spark, inCsv, TreeEnsembleModel.fromFile(p))
-      case (None, _) =>
-        run(spark, inCsv, TreeEnsembleModel.fromResource("/graft/tree_model.txt"))
+    // One read of the model artifact; its header selects the branch:
+    // `seqmodel` the RNN (model.py predict contract), `features` the trees
+    // (run.py CatBoost contract). A 4th argument is an explicit request for
+    // the latent branch: an encoder without a `latentmodel` header fails
+    // here, instead of falling through and zero-filling z_*.
+    val lines = Artifact.lines(args.lift(2).getOrElse("/graft/tree_model.txt"))
+    val encoder = args.lift(3).map(LatentEncoderModel.fromFile)
+    val branch: SparkSession => DataFrame = (Artifact.header(lines), encoder) match {
+      case ("seqmodel", None) =>
+        val m = SequenceModel.fromLines(lines); runSeq(_, inCsv, m)
+      case ("features", None) =>
+        val m = TreeEnsembleModel.fromLines(lines); run(_, inCsv, m)
+      case ("features", Some(e)) =>
+        val m = TreeEnsembleModel.fromLines(lines); runWithLatent(_, inCsv, m, e)
+      case (h, _) => throw new IllegalArgumentException(
+        s"model artifact header '$h' does not select a Submit branch " +
+          "(seqmodel, features, or features with a latentmodel encoder)")
     }
-    Tables.writeCsv(result, outCsv, singleFile = true)
+    val spark = LocalSession()
+    Tables.writeCsv(branch(spark), outCsv, singleFile = true)
     spark.stop()
   }
 

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.DataFrame
 
 /**
  * Native VRAE latent encoder — the engine-side forward pass of the
@@ -27,14 +26,11 @@ import org.apache.spark.sql.types.DoubleType
  *  - Dropout (0.1) lives INSIDE nn.LSTM between layers, so with depth 1 it
  *    is structurally a no-op — no eval-mode caveat needed here.
  *
- * Model artifact: committed TEXT (matrices of `Double.toString` literals,
- * bit-exact round-trip), emitted by `tools/convert_vrae_ckpt.py` from the
- * reference's `model_dir/vrae_5896.pth` (`run.py:176`) without torch.
- *
- * Scale: same shape as [[SequenceModel]] — one user_id shuffle to assemble
- * sequences, then an embarrassingly parallel per-user O(T · H · (F+H))
- * forward pass with the model broadcast once; the imperative recurrence is
- * the one justified `mapPartitions` class (brief option (d)).
+ * Model artifact: a committed `latentmodel` text artifact ([[Artifact]]),
+ * emitted by `tools/convert_vrae_ckpt.py` from the reference's
+ * `model_dir/vrae_5896.pth` (`run.py:176`) without torch. The per-user
+ * forward pass runs in the same stage as [[SequenceScorer]]
+ * ([[Recurrent.appendPerUser]]).
  */
 final case class LstmLayer(wIh: Array[Array[Double]], wHh: Array[Array[Double]],
                            bIh: Array[Double], bHh: Array[Double]) {
@@ -42,12 +38,7 @@ final case class LstmLayer(wIh: Array[Array[Double]], wHh: Array[Array[Double]],
   require(wIh.length == 4 * hidden && wHh.length == 4 * hidden &&
     bHh.length == 4 * hidden, "LSTM weight shapes must be (4H x F)/(4H x H)/4H")
 
-  private def dot(w: Array[Double], x: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < x.length) { s += w(i) * x(i); i += 1 }
-    s
-  }
-  private def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
+  import Recurrent.{dot, sigmoid}
 
   /** One recurrence step; mutates nothing, returns (h', c'). */
   def step(x: Array[Double], h: Array[Double],
@@ -103,12 +94,9 @@ final case class LatentEncoderModel(
     z
   }
 
-  /** Text artifact (grammar mirrors [[SequenceModel.toLines]]). */
+  /** The `latentmodel` text artifact. */
   def toLines: Seq[String] = {
-    def mat(name: String, m: Array[Array[Double]]): Seq[String] =
-      s"matrix $name ${m.length} ${m(0).length}" +: m.toSeq.map(_.mkString(" "))
-    def vec(name: String, v: Array[Double]): Seq[String] =
-      Seq(s"vector $name ${v.length}", v.mkString(" "))
+    import Artifact.{matrix => mat, vector => vec}
     Seq("latentmodel", s"nfeatures $nFeatures", s"hidden $hidden",
       s"latent $latent") ++
       mat("enc_wih", lstm.wIh) ++ mat("enc_whh", lstm.wHh) ++
@@ -120,108 +108,40 @@ final case class LatentEncoderModel(
 object LatentEncoderModel {
 
   def fromLines(lines: Seq[String]): LatentEncoderModel = {
-    val it = lines.iterator.map(_.trim).filter(_.nonEmpty).buffered
-    require(it.hasNext && it.next() == "latentmodel",
-      "latent encoder artifact must start with 'latentmodel'")
-    var nFeatures = 0
-    val mats = scala.collection.mutable.Map[String, Array[Array[Double]]]()
-    val vecs = scala.collection.mutable.Map[String, Array[Double]]()
-    def doubles(s: String): Array[Double] =
-      s.split("\\s+").map(java.lang.Double.parseDouble)
-    while (it.hasNext) {
-      val parts = it.next().split("\\s+")
-      parts(0) match {
-        case "nfeatures" => nFeatures = parts(1).toInt
-        case "hidden" | "latent" => // derived from the weight shapes
-        case "matrix" =>
-          val rows = parts(2).toInt
-          mats(parts(1)) = Array.fill(rows)(doubles(it.next()))
-        case "vector" => vecs(parts(1)) = doubles(it.next())
-        case other => throw new IllegalArgumentException(
-          s"unknown latentmodel section: $other")
-      }
-    }
+    // hidden and latent are derived from the weight shapes
+    val a = Artifact.parse(lines, "latentmodel",
+      Set("nfeatures", "hidden", "latent"))
+    val nFeatures = a.keys.get("nfeatures").fold(0)(_.head.toInt)
     require(nFeatures > 0, "latentmodel artifact missing nfeatures")
+    val (mats, vecs) = (a.matrices, a.vectors)
     LatentEncoderModel(nFeatures,
       LstmLayer(mats("enc_wih"), mats("enc_whh"),
         vecs("enc_bih"), vecs("enc_bhh")),
       mats("mean_w"), vecs("mean_b"))
   }
 
-  private def reader(path: String, in: java.io.InputStream): scala.io.Source =
-    scala.io.Source.fromInputStream(
-      if (path.endsWith(".gz")) new java.util.zip.GZIPInputStream(in) else in)
+  /** Load a `latentmodel` artifact from a filesystem path or classpath
+    * resource (see [[Artifact.lines]]). */
+  def fromFile(path: String): LatentEncoderModel =
+    fromLines(Artifact.lines(path))
 
-  def fromFile(path: String): LatentEncoderModel = {
-    val src = reader(path, new java.io.FileInputStream(path))
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
-
-  def fromResource(path: String): LatentEncoderModel = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"resource not found: $path")
-    val src = reader(path, in)
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
-
-  /** Sniff for the artifact dispatch in `graft.Submit`. */
-  def isLatentArtifact(path: String): Boolean = {
-    val src = reader(path, new java.io.FileInputStream(path))
-    try src.getLines().find(_.trim.nonEmpty).exists(_.trim == "latentmodel")
-    finally src.close()
-  }
-
-  /** Deterministic pseudo-random model (same splitmix64 recipe as
-    * [[SequenceModel.synthetic]]) — reproducible from (seed, shape). */
+  /** Deterministic pseudo-random model ([[Recurrent.Weights]]) —
+    * reproducible from (seed, shape). */
   def synthetic(nFeatures: Int, hidden: Int, latent: Int,
                 seed: Long): LatentEncoderModel = {
-    var ctr = seed
-    def u(): Double = {
-      ctr += 0x9E3779B97F4A7C15L
-      var z = ctr
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^= z >>> 31
-      (z >>> 11).toDouble / (1L << 53).toDouble - 0.5
-    }
-    def mat(r: Int, c: Int): Array[Array[Double]] = {
-      val scale = 1.0 / math.sqrt(c.toDouble)
-      Array.fill(r)(Array.fill(c)(u() * 2.0 * scale))
-    }
-    def vz(n: Int): Array[Double] = Array.fill(n)(u() * 0.1)
+    val w = new Recurrent.Weights(seed)
     LatentEncoderModel(nFeatures,
-      LstmLayer(mat(4 * hidden, nFeatures), mat(4 * hidden, hidden),
-        vz(4 * hidden), vz(4 * hidden)),
-      mat(latent, hidden), vz(latent))
+      LstmLayer(w.matrix(4 * hidden, nFeatures), w.matrix(4 * hidden, hidden),
+        w.vector(4 * hidden), w.vector(4 * hidden)),
+      w.matrix(latent, hidden), w.vector(latent))
   }
 }
 
-/** Appends `z_0..z_{L-1}` latent columns (rounded, reproducibly) to a frame
-  * carrying `seqCol` as the dense `array<array<double>>` tensor
-  * `Sequences.assembleSequences` emits — the engine form of
-  * `vrae.transform(...)` → `df_z` (`run.py:178-179`). */
-final case class LatentTransformer(model: LatentEncoderModel,
-                                   seqCol: String = "seq",
-                                   prefix: String = "z_",
-                                   roundTo: Int = 6) {
-  def transform(features: DataFrame): DataFrame = {
-    val spark = features.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    val idx = features.schema.fieldIndex(seqCol)
-    val outSchema = (0 until model.latent).foldLeft(features.schema) {
-      (s, j) => s.add(s"$prefix$j", DoubleType)
-    }
-    val scale = roundTo
-    val rdd = features.rdd.mapPartitions { rows =>
-      val m = bc.value
-      rows.map { r =>
-        val seq = r.getSeq[scala.collection.Seq[Double]](idx)
-          .map(_.toArray).toArray
-        val z = m.transform(seq).map(v => BigDecimal(v)
-          .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        Row.fromSeq(r.toSeq ++ z)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+/** Appends `z_0..z_{L-1}` latent columns to a frame carrying the dense
+  * `seq` tensor — the engine form of `vrae.transform(...)` → `df_z`
+  * (`run.py:178-179`). */
+final case class LatentTransformer(model: LatentEncoderModel) {
+  def transform(features: DataFrame): DataFrame =
+    Recurrent.appendPerUser(features, model,
+      (0 until model.latent).map(j => s"z_$j"))(_.transform(_))
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.DataFrame
 
 /**
  * Native sequence-model scorer — the engine-side forward pass of the
@@ -33,20 +32,12 @@ import org.apache.spark.sql.types.DoubleType
  *    torch-API quirk it papers over with seeding — and a DETERMINISTIC
  *    engine takes the intended eval behavior).
  *
- * The model is a committed TEXT artifact (same policy as
- * `TreeEnsemble.scala`): matrices of `Double.toString` literals, which
- * round-trip bit-exactly, so scores are reproducible across JVMs.
- * `tools/convert_nn_ckpt.py` emits this format from the reference's
+ * The model is a committed `seqmodel` text artifact ([[Artifact]]);
+ * `tools/convert_nn_ckpt.py` emits it from the reference's
  * `nn_weights.ckpt` + `nn_bins.pickle` pair (driver-side, needs torch).
- *
- * Scale: scoring is per-row compute over the assembled sequence tensors
- * (`Sequences.assembleSequences` — one shuffle on user_id), embarrassingly
- * parallel, O(T · H · (E+H)) per user with zero additional shuffle. The
- * model is broadcast once per job. This is deliberately a `mapPartitions`
- * stage (the brief's option (d)): a 300-step recurrence with per-step
- * nonlinearities is imperative math, not a relational expression — the
- * same judgment productionized Spark inference makes (pandas/arrow UDF or
- * mapPartitions around the native runtime).
+ * Scoring runs per user over the assembled sequence tensors
+ * (`Sequences.assembleSequences`, one shuffle on user_id), O(T · H · (E+H))
+ * per user, in the shared per-user stage [[Recurrent.appendPerUser]].
  */
 final case class GruLayer(wIh: Array[Array[Double]], wHh: Array[Array[Double]],
                           bIh: Array[Double], bHh: Array[Double]) {
@@ -54,12 +45,7 @@ final case class GruLayer(wIh: Array[Array[Double]], wHh: Array[Array[Double]],
   require(wIh.length == 3 * hidden && wHh.length == 3 * hidden &&
     bHh.length == 3 * hidden, "GRU weight shapes must be (3H x E)/(3H x H)/3H")
 
-  private def dot(w: Array[Double], x: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < x.length) { s += w(i) * x(i); i += 1 }
-    s
-  }
-  private def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
+  import Recurrent.{dot, sigmoid}
 
   /** One recurrence step; returns the new hidden state (length H). */
   def step(x: Array[Double], h: Array[Double]): Array[Double] = {
@@ -174,12 +160,10 @@ final case class SequenceModel(
     e1 / (e0 + e1)
   }
 
-  /** Text artifact (see [[SequenceModel.fromLines]] for the grammar). */
+  /** The `seqmodel` text artifact: `seqlen`/`features`/`hidden` lines,
+    * then the named matrix, vector and `edges` sections. */
   def toLines: Seq[String] = {
-    def mat(name: String, m: Array[Array[Double]]): Seq[String] =
-      s"matrix $name ${m.length} ${m(0).length}" +: m.toSeq.map(_.mkString(" "))
-    def vec(name: String, v: Array[Double]): Seq[String] =
-      Seq(s"vector $name ${v.length}", v.mkString(" "))
+    import Artifact.{matrix => mat, vector => vec}
     val head = Seq("seqmodel", s"seqlen $seqLen",
       "features " + features.mkString(" "), s"hidden $hidden")
     val embLines = features.flatMap(f => mat(s"embed_$f", embed(f)))
@@ -197,130 +181,54 @@ final case class SequenceModel(
 
 object SequenceModel {
 
-  /** Parse the text artifact: a `seqmodel` header, then `seqlen`/`features`/
-    * `hidden` lines, then named `matrix <name> R C` (R following lines of C
-    * doubles), `vector <name> N` (one line), and `edges <feature> N` (one
-    * line) sections in any order. */
   def fromLines(lines: Seq[String]): SequenceModel = {
-    val it = lines.iterator.map(_.trim).filter(_.nonEmpty).buffered
-    require(it.hasNext && it.next() == "seqmodel",
-      "sequence model artifact must start with 'seqmodel'")
-    var seqLen = 0; var hidden = 0; var features = Seq.empty[String]
-    val mats = scala.collection.mutable.Map[String, Array[Array[Double]]]()
-    val vecs = scala.collection.mutable.Map[String, Array[Double]]()
-    val edg = scala.collection.mutable.Map[String, Array[Double]]()
-    def doubles(s: String): Array[Double] =
-      s.split("\\s+").map(java.lang.Double.parseDouble)
-    while (it.hasNext) {
-      val parts = it.next().split("\\s+")
-      parts(0) match {
-        case "seqlen" => seqLen = parts(1).toInt
-        case "features" => features = parts.drop(1).toSeq
-        case "hidden" => hidden = parts(1).toInt
-        case "matrix" =>
-          val rows = parts(2).toInt
-          mats(parts(1)) = Array.fill(rows)(doubles(it.next()))
-        case "vector" => vecs(parts(1)) = doubles(it.next())
-        case "edges" => edg(parts(1)) = doubles(it.next())
-        case other => throw new IllegalArgumentException(
-          s"unknown seqmodel section: $other")
-      }
-    }
-    require(seqLen > 0 && hidden > 0 && features.nonEmpty,
+    val a = Artifact.parse(lines, "seqmodel", Set("seqlen", "features", "hidden"))
+    val seqLen = a.keys.get("seqlen").fold(0)(_.head.toInt)
+    val features = a.keys.getOrElse("features", Nil)
+    require(seqLen > 0 && features.nonEmpty && a.keys.contains("hidden"),
       "seqmodel artifact missing seqlen/hidden/features")
+    val (mats, vecs) = (a.matrices, a.vectors)
     def gru(p: String) =
       GruLayer(mats(s"${p}_wih"), mats(s"${p}_whh"),
         vecs(s"${p}_bih"), vecs(s"${p}_bhh"))
     SequenceModel(features,
-      features.map(f => f -> mats(s"embed_$f")).toMap, edg.toMap, seqLen,
-      gru("fwd"), gru("bwd"),
+      features.map(f => f -> mats(s"embed_$f")).toMap, a.edges,
+      seqLen, gru("fwd"), gru("bwd"),
       mats("cls_w1"), vecs("cls_b1"), mats("cls_w2"), vecs("cls_b2"))
   }
 
-  /** `.gz` paths/resources decompress transparently — the full-size
-    * converted reference checkpoint is ~8 MB of text, ~3.6 MB gzipped. */
-  private def reader(path: String, in: java.io.InputStream): scala.io.Source =
-    scala.io.Source.fromInputStream(
-      if (path.endsWith(".gz")) new java.util.zip.GZIPInputStream(in) else in)
+  /** Load a `seqmodel` artifact from a filesystem path or classpath
+    * resource (see [[Artifact.lines]]). */
+  def fromFile(path: String): SequenceModel = fromLines(Artifact.lines(path))
 
-  def fromFile(path: String): SequenceModel = {
-    val src = reader(path, new java.io.FileInputStream(path))
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
-
-  def fromResource(path: String): SequenceModel = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"resource not found: $path")
-    val src = reader(path, in)
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
-
-  /** Sniff whether a model file is a seqmodel artifact (vs the
-    * TreeEnsembleModel text format, whose first line is `features ...`). */
-  def isSequenceArtifact(path: String): Boolean = {
-    val src = reader(path, new java.io.FileInputStream(path))
-    try src.getLines().find(_.trim.nonEmpty).exists(_.trim == "seqmodel")
-    finally src.close()
-  }
-
-  /** Deterministic pseudo-random model (splitmix64-derived uniforms in
-    * [-0.5, 0.5) scaled by 1/sqrt(fanIn)) — the committed-artifact stand-in
-    * for a trained checkpoint, reproducible from (seed, shape) alone.
-    * `featureSpec` is (name, cardinality, embedDim[, edges]); embedding
-    * row 0 is zeroed (padding_idx). */
+  /** Deterministic pseudo-random model ([[Recurrent.Weights]]) — the
+    * committed-artifact stand-in for a trained checkpoint, reproducible from
+    * (seed, shape) alone. `featureSpec` is (name, cardinality, embedDim);
+    * embedding row 0 is zeroed (padding_idx). */
   def synthetic(featureSpec: Seq[(String, Int, Int)], hidden: Int,
                 clsUnits: Int, seqLen: Int, seed: Long,
                 edges: Map[String, Array[Double]] = Map.empty): SequenceModel = {
-    var ctr = seed
-    def u(): Double = {
-      ctr += 0x9E3779B97F4A7C15L
-      var z = ctr
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^= z >>> 31
-      (z >>> 11).toDouble / (1L << 53).toDouble - 0.5
-    }
-    def mat(r: Int, c: Int): Array[Array[Double]] = {
-      val scale = 1.0 / math.sqrt(c.toDouble)
-      Array.fill(r)(Array.fill(c)(u() * 2.0 * scale))
-    }
-    def vz(n: Int): Array[Double] = Array.fill(n)(u() * 0.1)
+    val w = new Recurrent.Weights(seed)
     val emb = featureSpec.map { case (f, card, dim) =>
-      val m = mat(card + 1, dim)
+      val m = w.matrix(card + 1, dim)
       java.util.Arrays.fill(m(0), 0.0) // padding row
       f -> m
     }.toMap
     val e = featureSpec.map(_._3).sum
-    def gru() = GruLayer(mat(3 * hidden, e), mat(3 * hidden, hidden),
-      vz(3 * hidden), vz(3 * hidden))
+    def gru() = GruLayer(w.matrix(3 * hidden, e), w.matrix(3 * hidden, hidden),
+      w.vector(3 * hidden), w.vector(3 * hidden))
     SequenceModel(featureSpec.map(_._1), emb, edges, seqLen, gru(), gru(),
-      mat(clsUnits, 6 * hidden), vz(clsUnits), mat(2, clsUnits), vz(2))
+      w.matrix(clsUnits, 6 * hidden), w.vector(clsUnits),
+      w.matrix(2, clsUnits), w.vector(2))
   }
 }
 
 /** [[Scorer]] plug for [[SequenceModel]]: appends `target` = class-1
-  * probability (rounded, reproducibly) to a frame carrying `seqCol` as the
-  * `array<array<double>>` tensor `Sequences.assembleSequences` emits
-  * (values are integer-valued feature indices). */
-final case class SequenceScorer(model: SequenceModel, seqCol: String = "seq",
-                                roundTo: Int = 6) extends Scorer {
-  override def score(features: DataFrame): DataFrame = {
-    val spark = features.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    val idx = features.schema.fieldIndex(seqCol)
-    val outSchema = features.schema.add("target", DoubleType)
-    val scale = roundTo
-    val rdd = features.rdd.mapPartitions { rows =>
-      val m = bc.value
-      rows.map { r =>
-        val seq = r.getSeq[scala.collection.Seq[Double]](idx)
-          .map(_.map(_.toInt).toArray).toArray
-        val p = m.forward(seq)
-        val rounded = BigDecimal(p)
-          .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-        Row.fromSeq(r.toSeq :+ rounded)
-      }
+  * probability to a frame carrying the `seq` index tensor (integer-valued
+  * doubles). */
+final case class SequenceScorer(model: SequenceModel) extends Scorer {
+  override def score(features: DataFrame): DataFrame =
+    Recurrent.appendPerUser(features, model, Seq("target")) { (m, seq) =>
+      Array(m.forward(seq.map(_.map(_.toInt))))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }

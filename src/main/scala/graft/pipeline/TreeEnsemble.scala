@@ -10,17 +10,17 @@ import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
  * reference's CatBoost scorer (reference `run.py:466-475`; its torch
  * GRU/VRAE scorers are the same plug with a different artifact).
  *
- * The model is a committed artifact (text resource), and scoring COMPILES
- * the trees into nested Catalyst `when` chains — a pure projection that
- * whole-stage-codegens into straight-line branchy Java, exactly how one
- * productionizes GBT inference on Spark: no UDF, no model broadcast, no
- * per-row interpreter. `toSql` emits the equivalent CASE expression so an
- * external SQL engine can replay the score bit-for-bit (leaf sums are
- * literal doubles added in a fixed order — no transcendentals, so the
- * result is exact in any IEEE-754 engine).
+ * The model is a committed `features`-headed text artifact ([[Artifact]]),
+ * and scoring COMPILES the trees into nested Catalyst `when` chains summed
+ * by one `aggregate` — a pure projection: no UDF, no model broadcast, no
+ * Row conversion of the (often 600-column) feature matrix. `toSql` emits
+ * the equivalent CASE expression so an external SQL engine can replay the
+ * score bit-for-bit (leaf sums are literal doubles added in a fixed order —
+ * no transcendentals, so the result is exact in any IEEE-754 engine).
  *
- * Scale: inference cost is O(rows × total tree depth) inside codegen, no
- * shuffle, no driver participation — the plan is identical at 100 TB.
+ * Scale: inference cost is O(rows × total tree depth) per feature-matrix
+ * row (one row per user), no shuffle, no driver participation — the plan
+ * is identical at 100 TB.
  */
 sealed trait TreeNode
 final case class TreeLeaf(value: Double) extends TreeNode
@@ -30,11 +30,16 @@ final case class TreeSplit(feature: String, threshold: Double,
 final case class TreeEnsembleModel(featureNames: Seq[String], bias: Double,
                                    trees: Seq[TreeNode]) {
 
-  /** The additive score as one Catalyst expression tree:
-    * `bias + tree0 + tree1 + ...` (left-associated — the same float
-    * addition order [[toSql]] emits, so both are bit-identical). */
+  /** The additive score `bias + tree0 + tree1 + ...`, added left to right
+    * — the float addition order [[toSql]] emits, so both are bit-identical.
+    * The sum is one `aggregate` over an array of the trees, not a nested
+    * `+` chain: a CatBoost-sized ensemble (1000 trees) as a 1000-deep
+    * expression overflows the driver stack in Spark's Column→Expression
+    * conversion. `aggregate` has no codegen of its own, so the trees are
+    * evaluated by the interpreter inside the generated stage, once per
+    * user row. */
   def scoreColumn: Column =
-    trees.map(compile).foldLeft(lit(bias): Column)(_ + _)
+    aggregate(array(trees.map(compile): _*), lit(bias), _ + _)
 
   private def compile(n: TreeNode): Column = n match {
     case TreeLeaf(v) => lit(v)
@@ -111,33 +116,24 @@ object TreeEnsembleModel {
       m.trees.flatMap(t => "tree" +: tree(t))
   }
 
-  /** Load a model artifact from a filesystem path — the CLI's swap-the-model
-    * hook (`graft.Submit in.csv out.csv model.txt`), mirroring the
-    * reference's `load_model("./model_dir/model_cb.cbm")` (`run.py:466`). */
-  def fromFile(path: String): TreeEnsembleModel = {
-    val src = scala.io.Source.fromFile(path, "UTF-8")
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
-
-  /** Load a committed model artifact from the classpath. */
-  def fromResource(path: String): TreeEnsembleModel = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"model resource not found: $path")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try fromLines(src.getLines().toSeq) finally src.close()
-  }
+  /** Load a model artifact from a filesystem path or classpath resource
+    * ([[Artifact.lines]]) — the CLI's swap-the-model hook
+    * (`graft.Submit in.csv out.csv model.txt`), mirroring the reference's
+    * `load_model("./model_dir/model_cb.cbm")` (`run.py:466`). */
+  def fromFile(path: String): TreeEnsembleModel =
+    fromLines(Artifact.lines(path))
 
   /** Parse the flat text dump (the shape tree libraries export):
     * `features <names...>`, `bias <v>`, then per tree a `tree` marker
     * followed by `n <id> <feature> <threshold> <left> <right>` internal
     * nodes and `l <id> <value>` leaves; each tree's root has id 0. */
   def fromLines(lines: Seq[String]): TreeEnsembleModel = {
-    val rows = lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+    Artifact.requireHeader(lines, "features")
     var features = Seq.empty[String]
     var bias = 0.0
     val treeRows = Seq.newBuilder[Seq[Array[String]]]
     var cur: scala.collection.mutable.Buffer[Array[String]] = null
-    rows.foreach { line =>
+    Artifact.content(lines).foreach { line =>
       val parts = line.split("\\s+")
       parts(0) match {
         case "features" => features = parts.drop(1).toSeq

@@ -105,13 +105,24 @@ object Tables {
     StructField("transaction_dttm", TimestampType, nullable = true)))
 
   /** S1: CSV scan with declared schema + timestamp parsing
-    * (`model.py:208-212`, `run.py:29,90`). */
-  def readTransactionsCsv(spark: SparkSession, path: String): DataFrame =
+    * (`model.py:208-212`, `run.py:29,90`). The input contract fails loudly
+    * rather than mis-score quietly: a value that does not parse as its
+    * declared type fails the read (`FAILFAST`), and so does a missing
+    * `user_id`, checked inside the same projection (no extra job). Other
+    * empty fields read as null, which the pipelines' dropna/cleaning
+    * handles (e.g. a user without `currency_rk`). */
+  def readTransactionsCsv(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     spark.read
       .schema(transactionsSchema)
       .option("header", "true")
+      .option("mode", "FAILFAST")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
       .csv(path)
+      .withColumn("user_id", when(col("user_id").isNull,
+        raise_error(lit(s"transactions CSV row without user_id: $path")))
+        .otherwise(col("user_id")))
+  }
 
   /** JSONL (newline-delimited JSON) sink — the interchange format training
     * corpora actually ship in. One JSON object per line; splittable,

@@ -17,14 +17,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // keep bucketed-table specs out of the repo root
-    .config("spark.sql.warehouse.dir",
-      s"${sys.props("java.io.tmpdir")}/graft_test_warehouse")
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // keep bucketed-table specs out of the repo root
+      .config("spark.sql.warehouse.dir",
+        s"${sys.props("java.io.tmpdir")}/graft_test_warehouse")
+      .getOrCreate()
+    // WARN, as LocalSession: INFO buries failing assertions
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import graft.pipeline.{SequenceModel, TreeEnsembleModel, TreeLeaf, TreeSplit}
+import graft.pipeline.{Artifact, SequenceModel, TreeEnsembleModel, TreeLeaf,
+  TreeNode, TreeSplit}
 import graft.schema.Tables
 
 /** The `run.py in.csv out.csv` CLI contract, end to end on a synthetic
@@ -29,6 +30,25 @@ class SubmitSpec extends SparkSpec {
     rows.foreach(w.println)
     w.close()
     f.getAbsolutePath
+  }
+
+  /** Runs `graft.Submit args` in a child JVM on this JVM's classpath and
+    * --add-opens flags, with the spec session's core count; returns the
+    * exit code and the output lines. */
+  private def runCli(args: String*): (Int, Seq[String]) = {
+    val log = Files.createTempFile("graft_submit_cli", ".log").toFile
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
+      addOpens ++ Seq("-cp", sys.props("java.class.path"), "graft.Submit") ++
+      args
+    val pb = new ProcessBuilder(cmd.asJava)
+      .redirectErrorStream(true).redirectOutput(log)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val rc = pb.start().waitFor()
+    val out = Files.readAllLines(log.toPath).asScala.toSeq
+    log.delete()
+    (rc, out)
   }
 
   /** User 1 scores; user 2 holds only 6012 rows and falls back. */
@@ -66,18 +86,8 @@ class SubmitSpec extends SparkSpec {
     Files.writeString(modelTxt.toPath,
       TreeEnsembleModel.toLines(model).mkString("", "\n", "\n"))
     val (cliOut, libOut) = (s"$dir/cli", s"$dir/lib")
-    val log = new java.io.File(dir, "cli.log")
-    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
-      addOpens ++ Seq("-cp", sys.props("java.class.path"), "graft.Submit",
-        in, cliOut, modelTxt.getPath)
-    val pb = new ProcessBuilder(cmd.asJava)
-      .redirectErrorStream(true).redirectOutput(log)
-    pb.environment().put("SPARK_GRAFT_CPUS", "2")
-    val rc = pb.start().waitFor()
-    assert(rc == 0, s"exit $rc:\n" +
-      Files.readAllLines(log.toPath).asScala.takeRight(30).mkString("\n"))
+    val (rc, log) = runCli(in, cliOut, modelTxt.getPath)
+    assert(rc == 0, s"exit $rc:\n" + log.takeRight(30).mkString("\n"))
 
     Tables.writeCsv(Submit.run(spark, in, model), libOut, singleFile = true)
     def csvPart(out: String): Array[Byte] = {
@@ -190,7 +200,7 @@ class SubmitSpec extends SparkSpec {
     val w = new java.io.PrintWriter(f, "UTF-8")
     seqModel.toLines.foreach(w.println)
     w.close()
-    assert(SequenceModel.isSequenceArtifact(f.getPath))
+    assert(Artifact.header(Artifact.lines(f.getPath)) == "seqmodel")
     val back = SequenceModel.fromFile(f.getPath)
     assert(back.features == seqModel.features &&
       back.seqLen == seqModel.seqLen)
@@ -200,7 +210,7 @@ class SubmitSpec extends SparkSpec {
   test("committed converted reference checkpoint scores the RNN branch") {
     // the real artifact (128 hidden, 300 steps): end-to-end smoke with
     // determinism — two runs, same scores, probabilities in (0,1)
-    val m = SequenceModel.fromResource("/graft/seq_model_tx.txt.gz")
+    val m = SequenceModel.fromFile("/graft/seq_model_tx.txt.gz")
     val rows = Seq(
       "1,5411,48,100.0,2023-01-02 10:00:00",
       "1,5812,48,-50.0,2023-01-02 10:00:01",
@@ -224,5 +234,134 @@ class SubmitSpec extends SparkSpec {
     val back = TreeEnsembleModel.fromFile(f.getAbsolutePath)
     assert(back == model)
     f.delete()
+  }
+
+  // --- fail loudly: artifact dispatch and the input contract ------------
+
+  private def treeArtifact(dir: java.io.File): String = {
+    val f = new java.io.File(dir, "model.txt")
+    Files.writeString(f.toPath,
+      TreeEnsembleModel.toLines(model).mkString("", "\n", "\n"))
+    f.getPath
+  }
+
+  test("Submit CLI fails loudly on a 4th argument that is not a latent encoder") {
+    val in = csvOf(scoredAndVanished)
+    val dir = new java.io.File(in).getParentFile
+    val tree = treeArtifact(dir)
+    val (rc, log) = runCli(in, s"$dir/out", tree, tree)
+    assert(rc != 0 && log.exists(_.contains(
+      "expected a 'latentmodel' model artifact, found header 'features'")),
+      log.takeRight(30).mkString("\n"))
+    assert(!new java.io.File(s"$dir/out").exists)
+    rmTree(dir)
+  }
+
+  test("Submit CLI fails loudly on an unknown artifact header") {
+    val in = csvOf(scoredAndVanished)
+    val dir = new java.io.File(in).getParentFile
+    val odd = new java.io.File(dir, "odd.txt")
+    Files.writeString(odd.toPath, "# not a model\nweights 1 2 3\n")
+    val (rc, log) = runCli(in, s"$dir/out", odd.getPath)
+    assert(rc != 0 && log.exists(_.contains("model artifact header 'weights'")),
+      log.takeRight(30).mkString("\n"))
+    assert(!new java.io.File(s"$dir/out").exists)
+    rmTree(dir)
+  }
+
+  /** `scoredAndVanished` plus one bad row must fail the run, with `expect`
+    * somewhere in the error's cause chain. */
+  private def rejects(badRow: String, expect: String): Unit = {
+    val in = csvOf(scoredAndVanished :+ badRow)
+    val e = intercept[Exception](Submit.run(spark, in, model).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msgs.contains(expect), msgs)
+    rmTree(new java.io.File(in).getParentFile)
+  }
+
+  test("input contract: a non-numeric user_id fails the run") {
+    rejects(s"u9,5411,48,12.0,${ts(200)}", "FAILFAST")
+  }
+
+  test("input contract: a non-numeric amount fails the run") {
+    rejects(s"1,5411,48,12x5,${ts(200)}", "FAILFAST")
+  }
+
+  test("input contract: an unparsable timestamp fails the run") {
+    rejects("1,5411,48,12.0,2023-01-01 10:61:00", "FAILFAST")
+  }
+
+  test("input contract: an empty user_id fails the run") {
+    rejects(s",5411,48,12.0,${ts(200)}", "transactions CSV row without user_id")
+  }
+
+  // --- CatBoost-sized tree ensembles -------------------------------------
+
+  test("a 1000-tree artifact scores through Submit.run, equal to a Scala fold") {
+    // 1000 trees is a default CatBoost fit; as a 1000-deep `+` chain the
+    // score overflowed the driver stack. Depth 3 keeps planning fast — the
+    // chain length, not the depth, is what overflowed.
+    val feats = Seq("freq_5411", "freq_5812", "proc_5411", "proc_5812",
+      "td_mean", "td_std")
+    val range = Map("freq_5411" -> 20.0, "freq_5812" -> 20.0,
+      "proc_5411" -> 600.0, "proc_5812" -> 600.0, "td_mean" -> 40000.0,
+      "td_std" -> 2000.0)
+    val rnd = new scala.util.Random(1000L)
+    def grow(depth: Int): TreeNode =
+      if (depth == 0) TreeLeaf(rnd.nextGaussian() * 0.01)
+      else {
+        val f = feats(rnd.nextInt(feats.length))
+        TreeSplit(f, rnd.nextDouble() * range(f), grow(depth - 1),
+          grow(depth - 1))
+      }
+    val big = TreeEnsembleModel(feats, 0.125, Seq.fill(1000)(grow(3)))
+    val rows = scoredAndVanished ++ (1 to 60).map(i =>
+      s"3,${if (i % 3 == 0) 5812 else 5411},48,${i * 7 % 50 + 1}.5,${ts(2 * i)}")
+    val in = csvOf(rows)
+    val dir = new java.io.File(in).getParentFile
+    val art = new java.io.File(dir, "big.txt")
+    Files.writeString(art.toPath,
+      TreeEnsembleModel.toLines(big).mkString("", "\n", "\n"))
+    val loaded = TreeEnsembleModel.fromFile(art.getPath)
+    assert(loaded == big)
+    val got = Submit.run(spark, in, loaded).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+    // the aligned matrix Submit.run scores, from the same public stages
+    import org.apache.spark.sql.functions.col
+    val tx = Tables.readTransactionsCsv(spark, in).select(col("user_id"),
+      col("mcc_code").cast("string").as("code"),
+      col("transaction_amt").as("amt"), col("transaction_dttm").as("ts"))
+    val cleaned = graft.pipeline.Pipeline.clean(tx, "user_id", "code", "amt",
+      Seq(col("ts")), graft.pipeline.Pipeline.Config(nAmt = 10, nMcc = 10,
+        trimN = 20, dropCodes = Submit.DefaultDropCodes))
+    val aligned = graft.pipeline.Pipeline.alignFeatures(
+      graft.pipeline.Pipeline.featureMatrixFused(cleaned, "user_id", "code",
+        "amt", graft.ops.TimeFeatures.secondsSinceMidnight(col("ts")),
+        Seq("5411", "5812")), "user_id", feats)
+      .withColumn("raw", big.scoreColumn).collect()
+    def walk(n: TreeNode, x: Map[String, Any]): Double = n match {
+      case TreeLeaf(v) => v
+      case TreeSplit(f, t, l, r) => x(f) match {
+        case v: java.lang.Number if v.doubleValue <= t => walk(l, x)
+        case _ => walk(r, x) // > t or null, as `when(... <= t)` falls through
+      }
+    }
+    val fold = aligned.map { r =>
+      val x = feats.map(f => f -> r.getAs[Any](f)).toMap
+      r.getLong(0) -> big.trees.foldLeft(big.bias)((acc, t) => acc + walk(t, x))
+    }.toMap
+    assert(fold.keySet == Set(1L, 3L))
+    // unrounded, the Catalyst sum is the Scala fold bit for bit
+    assert(aligned.map(r => r.getLong(0) -> r.getAs[Double]("raw")).toMap == fold)
+    // and Submit's output is that fold under the scorer's 6-dp rounding
+    import spark.implicits._
+    val want = fold.toSeq.toDF("user_id", "s")
+      .select(col("user_id"), graft.ops.CrossRound.round(col("s"), 6))
+      .as[(Long, Double)].collect().toMap
+    assert(got - 2L == want)
+    assert(got(2L) == want.values.max, "vanished user carries the max")
+    rmTree(dir)
   }
 }

@@ -52,7 +52,7 @@ class LatentEncoderSpec extends SparkSpec {
 
   // ---- the REAL converted checkpoint (vrae_5896.pth → vrae_encoder.txt.gz)
   private lazy val real =
-    LatentEncoderModel.fromResource("/graft/vrae_encoder.txt.gz")
+    LatentEncoderModel.fromFile("/graft/vrae_encoder.txt.gz")
 
   test("converted reference checkpoint has the run.py shapes") {
     // run.py:143-156: hidden 120, depth 1, latent 40; 394 = the 391-col

@@ -131,7 +131,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("committed tree model parses: 52 features, additive trees score") {
-    val m = TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    val m = TreeEnsembleModel.fromFile("/graft/tree_model.txt")
     assert(m.featureNames.size == 52)
     assert(m.featureNames.count(_.startsWith("ctx_")) == 40)
     assert(m.trees.size == 6)
@@ -144,7 +144,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("TreeEnsembleScorer matches a reference walk over aligned features") {
-    val m = TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    val m = TreeEnsembleModel.fromFile("/graft/tree_model.txt")
     // three users with distinct paths through the trees
     val rows = Seq(
       (1L, 20.0, 5.0, 15.0, 2.0, 20.0, 2000.0, -500.0, 1600.0, 100.0,
@@ -170,7 +170,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("artifact round-trips: fromLines(toLines(m)) == m") {
-    val m = TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    val m = TreeEnsembleModel.fromFile("/graft/tree_model.txt")
     assert(TreeEnsembleModel.fromLines(TreeEnsembleModel.toLines(m)) == m)
   }
 
@@ -178,7 +178,7 @@ class PipelineSpec extends SparkSpec {
     // the emitted CASE SQL is what the external oracle runs; prove it
     // computes exactly what the compiled Column computes by evaluating
     // both in the same engine over rows that exercise every split
-    val m = TreeEnsembleModel.fromResource("/graft/tree_model.txt")
+    val m = TreeEnsembleModel.fromFile("/graft/tree_model.txt")
     val real = m.featureNames.filterNot(_.startsWith("ctx_"))
     val rows = (0 until 64).map { i =>
       // pseudo-random but deterministic values spanning the thresholds

@@ -97,7 +97,7 @@ class SequenceModelSpec extends SparkSpec {
     val seq = Array(Array(1, 2), Array(3, 5), Array(0, 0))
     assert(back.forward(seq) == m.forward(seq)) // Double.toString round-trip
     assert(back.edges("b").toSeq == Seq(0.0, 1.5, 3.0))
-    // file round-trip incl. gz + artifact sniffing
+    // file round-trip incl. gz + the header Submit dispatches on
     val dir = java.nio.file.Files.createTempDirectory("seqmodel").toFile
     val plain = new java.io.File(dir, "m.txt")
     java.nio.file.Files.write(plain.toPath,
@@ -108,7 +108,7 @@ class SequenceModelSpec extends SparkSpec {
     os.write(m.toLines.mkString("\n").getBytes); os.close()
     assert(SequenceModel.fromFile(plain.getPath).forward(seq) == m.forward(seq))
     assert(SequenceModel.fromFile(gz.getPath).forward(seq) == m.forward(seq))
-    assert(SequenceModel.isSequenceArtifact(plain.getPath))
+    assert(Artifact.header(Artifact.lines(gz.getPath)) == "seqmodel")
     rmTree(dir)
   }
 
@@ -131,7 +131,7 @@ class SequenceModelSpec extends SparkSpec {
   }
 
   test("committed converted reference checkpoint loads with the right shape") {
-    val m = SequenceModel.fromResource("/graft/seq_model_tx.txt.gz")
+    val m = SequenceModel.fromFile("/graft/seq_model_tx.txt.gz")
     // model.py:14-22 embedding_projections + rnn_units=128
     assert(m.features == Seq("hour", "mcc_code", "currency_rk",
       "transaction_amt", "day", "month", "number_day"))

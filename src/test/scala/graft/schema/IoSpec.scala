@@ -67,18 +67,26 @@ class IoSpec extends SparkSpec {
     }
   }
 
-  test("declared schema rejects malformed rows as nulls (permissive read)") {
+  test("declared schema fails fast on a malformed row; empty fields read as null") {
     val dir = Files.createTempDirectory("graft-io2")
-    val f = dir.resolve("bad.csv")
-    Files.writeString(f,
-      "user_id,mcc_code,currency_rk,transaction_amt,transaction_dttm\n" +
-        "1,5411,48,12.5,2023-01-01 00:00:00\n" +
-        "2,notanumber,48,1.0,2023-01-01 00:00:00\n")
-    val back = Tables.readTransactionsCsv(spark, f.toString)
-    val mccs = back.orderBy("user_id").select("mcc_code").collect()
+    val header = "user_id,mcc_code,currency_rk,transaction_amt,transaction_dttm\n"
+    val good = dir.resolve("good.csv")
+    Files.writeString(good, header +
+      "1,5411,48,12.5,2023-01-01 00:00:00\n" +
+      "2,5411,,1.0,2023-01-01 00:00:00\n")
+    val back = Tables.readTransactionsCsv(spark, good.toString)
+    val curs = back.orderBy("user_id").select("currency_rk").collect()
       .map(r => Option(r.get(0)))
-    assert(mccs.toSeq == Seq(Some(5411L), None))
+    assert(curs.toSeq == Seq(Some(48L), None))
     // reference drops such rows immediately after read (P1, model.py:214)
     assert(back.na.drop().count() == 1)
+    val bad = dir.resolve("bad.csv")
+    Files.writeString(bad, header +
+      "1,5411,48,12.5,2023-01-01 00:00:00\n" +
+      "2,notanumber,48,1.0,2023-01-01 00:00:00\n")
+    val e = intercept[Exception](
+      Tables.readTransactionsCsv(spark, bad.toString).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("FAILFAST")), e)
   }
 }
