@@ -41,6 +41,7 @@ object Submit {
     require(args.length >= 2 && args.length <= 4, "usage: graft.Submit " +
       "<transactions.csv> <output.csv> [model.txt [latent_encoder.txt]]")
     val (inCsv, outCsv) = (args(0), args(1))
+    val spark = LocalSession()
     // One read of the model artifact; its header selects the branch:
     // `seqmodel` the RNN (model.py predict contract), `features` the trees
     // (run.py CatBoost contract). A 4th argument is an explicit request for
@@ -48,19 +49,18 @@ object Submit {
     // here, instead of falling through and zero-filling z_*.
     val lines = Artifact.lines(args.lift(2).getOrElse("/graft/tree_model.txt"))
     val encoder = args.lift(3).map(LatentEncoderModel.fromFile)
-    val branch: SparkSession => DataFrame = (Artifact.header(lines), encoder) match {
+    val result = (Artifact.header(lines), encoder) match {
       case ("seqmodel", None) =>
-        val m = SequenceModel.fromLines(lines); runSeq(_, inCsv, m)
+        runSeq(spark, inCsv, SequenceModel.fromLines(lines))
       case ("features", None) =>
-        val m = TreeEnsembleModel.fromLines(lines); run(_, inCsv, m)
+        run(spark, inCsv, TreeEnsembleModel.fromLines(lines))
       case ("features", Some(e)) =>
-        val m = TreeEnsembleModel.fromLines(lines); runWithLatent(_, inCsv, m, e)
+        runWithLatent(spark, inCsv, TreeEnsembleModel.fromLines(lines), e)
       case (h, _) => throw new IllegalArgumentException(
         s"model artifact header '$h' does not select a Submit branch " +
           "(seqmodel, features, or features with a latentmodel encoder)")
     }
-    val spark = LocalSession()
-    Tables.writeCsv(branch(spark), outCsv, singleFile = true)
+    Tables.writeCsv(result, outCsv, singleFile = true)
     spark.stop()
   }
 
