@@ -106,8 +106,9 @@ private[pipeline] object Recurrent {
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
   /** splitmix64-derived uniforms in [-0.5, 0.5): matrices scaled by
-    * 1/sqrt(fanIn), vectors by 0.1. A model is reproducible from (seed,
-    * shape) alone as long as its builder draws in a fixed order. */
+    * 1/sqrt(fanIn), vectors by 0.1. A synthetic model is reproducible
+    * from (seed, shape) alone as long as it draws its weights in a fixed
+    * order. */
   final class Weights(seed: Long) {
     private var ctr = seed
     private def u(): Double = {

@@ -11,8 +11,8 @@ class ArtifactSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
 
   test("synthetic models keep their artifact bytes (q80/q83 and spec shapes)") {
-    // digests of `toLines` as the per-model builders wrote them; the golden
-    // fixtures of q80/q83 were computed from these exact weights
+    // digests of `toLines` from before the two models shared one weight
+    // generator; the golden fixtures of q80/q83 use these exact weights
     assert(sha256(LatentEncoderModel.synthetic(8, 10, 6, 20230514L).toLines) ==
       "129f4d8e01792096991c233626ae145825b450d0934e6f5e517b2e43efb53301")
     assert(sha256(LatentEncoderModel.synthetic(3, 5, 4, 7L).toLines) ==
