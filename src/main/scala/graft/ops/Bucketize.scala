@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import graft.functions.BucketizeEdges
 
 /**
  * P11: explicit-edge bucketize → bin ordinal
@@ -9,21 +10,18 @@ import org.apache.spark.sql.functions._
  * edges from `nn_bins.pickle`).
  *
  * pandas `cut` semantics: bins are (edge_i, edge_{i+1}] — left-open,
- * right-closed; values outside [edges.head, edges.last] → null.
- * A chained `when` stays codegen-friendly for the edge counts the reference
- * uses; for very long edge lists a Bucketizer-style binary search Expression
- * would be the upgrade path.
+ * right-closed; values outside (edges.head, edges.last], NaN and null →
+ * null. The input is cast to double; the result is a nullable int.
+ * Edges must be non-decreasing without NaN (pandas raises on
+ * non-monotone bins); violating lists fail here, when the column is built.
+ *
+ * One native [[BucketizeEdges]] expression does a binary search over the
+ * edges, so a feature costs the same few generated lines at any edge
+ * count — the committed bi-GRU artifact's `mcc_code` alone has 395 edges.
  */
 object Bucketize {
 
-  def apply(c: Column, edges: Seq[Double]): Column = {
-    require(edges.size >= 2, "need at least two edges")
-    // Unmatched `when` yields null, so coalesce picks the (unique) matching
-    // bin and leaves out-of-range values null — pandas NaN.
-    val bins = edges.sliding(2).zipWithIndex.map {
-      case (Seq(lo, hi), i) => when(c > lo && c <= hi, i)
-      case _ => lit(null)
-    }.toSeq
-    coalesce(bins: _*)
-  }
+  def apply(c: Column, edges: Seq[Double]): Column =
+    ColumnShim.column(BucketizeEdges(
+      ColumnShim.expression(c.cast("double")), edges.toIndexedSeq))
 }

@@ -15,7 +15,8 @@ import graft.ops._
  * (`run.py:84-90`, operator S3), `clean` returns a lazy DataFrame with no
  * disk round-trip. The fused feature matrix is its only reader, so it is
  * not cached; the scored frame is materialised once in [[submission]],
- * ahead of its three consumers. Everything stays one lazy Catalyst plan
+ * ahead of its three consumers (the max read back to the driver, the
+ * anti-join and the union). Everything stays one lazy Catalyst plan
  * per sink; all per-user stages are co-partitioned on the user key, so the
  * exchange introduced by the first groupBy is reused by every later
  * join/window.
@@ -106,17 +107,24 @@ object Pipeline {
   }
 
   /** Score + fallback: users present in `allUsers` but dropped during
-    * cleaning re-enter with the maximum score (`run.py:480-486`). */
+    * cleaning re-enter with the maximum score (`run.py:480-486`). Fails
+    * when no user is scored (empty input, or cleaning dropped every
+    * user): there is no maximum to fall back to, and an all-empty
+    * `target` column would pass for a submission. */
   def submission(features: DataFrame, scorer: Scorer, allUsers: DataFrame,
                  user: String): DataFrame = {
-    // three consumers (union, anti-join, broadcast max): materialise once
-    // so the scorer and the feature matrix under it run once, not thrice
+    // three consumers (max, anti-join, union): materialise once so the
+    // scorer and the feature matrix under it run once, not thrice
     val scored = scorer.score(features).select(col(user), col("target"))
       .localCheckpoint(true)
+    val top = scored.agg(max(col("target"))).head().get(0)
+    require(top != null, "no user was scored: the input has no " +
+      "transactions, or cleaning dropped every user, so there is no " +
+      "maximum score for the fallback")
     val vanished = allUsers.select(col(user)).distinct()
       .join(scored.select(col(user)), Seq(user), "left_anti")
-    val fallback = vanished.crossJoin(
-      broadcast(scored.agg(max(col("target")).as("target"))))
+    val fallback = vanished.select(col(user),
+      lit(top).cast(scored.schema("target").dataType).as("target"))
     scored.unionByName(fallback).orderBy(col(user))
   }
 }

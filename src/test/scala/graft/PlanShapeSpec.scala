@@ -127,6 +127,31 @@ class PlanShapeSpec extends SparkSpec {
       wide.headOption.map(_.simpleString(200)).getOrElse(""))
   }
 
+  test("Submit RNN digitize: one bucketize per edged feature, no CaseWhen") {
+    // the committed bi-GRU's 7 edge lists (585 edges) digitize as one
+    // binary-search expression each, never as a when-chain per bin
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    import graft.functions.BucketizeEdges
+    import graft.pipeline.SequenceModel
+    val model = SequenceModel.fromFile("/graft/seq_model_tx.txt.gz")
+    // an RDD scan in the CSV reader's schema, without the reader's own
+    // input-contract `when`, so the projections are not folded away
+    val tx = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(1L, 5411L, 48L, 100.0,
+        java.sql.Timestamp.valueOf("2023-01-02 10:00:00")))),
+      Tables.transactionsSchema)
+    val seqs = Submit.sequences(tx, model)
+    val exprs = seqs.queryExecution.optimizedPlan.collect {
+      case p => p.expressions
+    }.flatten.flatMap(_.collect { case e => e })
+    val caseWhens = exprs.count(_.isInstanceOf[CaseWhen])
+    val buckets = exprs.count(_.isInstanceOf[BucketizeEdges])
+    assert(seqs.count() == 1)
+    assert(caseWhens == 0, s"$caseWhens CaseWhen nodes in the digitize plan")
+    assert(model.edges.size == 7 && buckets == 7,
+      s"$buckets bucketize nodes for ${model.edges.size} edged features")
+  }
+
   test("epochShuffle: ONE hash exchange on the shard key, no range sort") {
     // the training-order shuffle must never become a global range sort
     // (whose partitioner samples the corpus) or a driver-side index —

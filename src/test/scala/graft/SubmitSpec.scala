@@ -269,6 +269,33 @@ class SubmitSpec extends SparkSpec {
     rmTree(dir)
   }
 
+  /** `graft.Submit in out model` must exit non-zero with the no-user-scored
+    * message and leave no output behind. */
+  private def failsUnscored(in: String, model: java.io.File => String)
+  : Unit = {
+    val dir = new java.io.File(in).getParentFile
+    val (rc, log) = runCli(in, s"$dir/out", model(dir))
+    assert(rc != 0 && log.exists(_.contains("no user was scored")),
+      log.takeRight(30).mkString("\n"))
+    assert(!new java.io.File(s"$dir/out").exists, "output written")
+    rmTree(dir)
+  }
+
+  test("Submit CLI fails loudly on a header-only CSV (tree and RNN branch)") {
+    failsUnscored(csvOf(Nil), treeArtifact)
+    failsUnscored(csvOf(Nil), dir => {
+      val f = new java.io.File(dir, "seq.txt")
+      Files.writeString(f.toPath, seqModel.toLines.mkString("", "\n", "\n"))
+      f.getPath
+    })
+  }
+
+  test("Submit CLI fails loudly when cleaning drops every user") {
+    // the only user holds nothing but 6012 rows
+    failsUnscored(csvOf((1 to 2).map(i => s"2,6012,48,99.0,${ts(i)}")),
+      treeArtifact)
+  }
+
   /** `scoredAndVanished` plus one bad row must fail the run, with `expect`
     * somewhere in the error's cause chain. */
   private def rejects(badRow: String, expect: String): Unit = {
