@@ -1,12 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
-import graft.ops._
-import graft.pipeline.{LinearScorer, Pipeline, TreeEnsembleModel,
-  TreeEnsembleScorer}
 import graft.schema.Tables
 
 /**

@@ -1,13 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
 import graft.ops._
-import graft.pipeline.{LinearScorer, Pipeline, TreeEnsembleModel,
-  TreeEnsembleScorer}
-import graft.schema.Tables
 import graft.Queries._
 
 /** Driver-contract registry slice q01-q20: the reference pipeline's per-operator inventory (SURVEY.md §2 P/A/W/E rows) over the events table.

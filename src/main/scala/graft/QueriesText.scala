@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops._
 import graft.schema.Tables
 

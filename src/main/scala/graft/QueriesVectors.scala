@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
 import graft.ops._
-import graft.schema.Tables
 import graft.QueriesText._
 
 /** Registry slice e01-e25 + m01-m12 + c04: embedding KNN (brute/LSH/IVF/PQ), k-means, random projection, persisted index, metadata-filtered ANN, hard-negative mining, the matryoshka width-truncation recall audit, and the multimodal family — real PGM/WAV/Y4M codecs with decode, resize, perceptual dedup, quality gates, VAD, frame sampling, scene cuts and the cross-modal curation report.

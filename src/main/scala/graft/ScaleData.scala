@@ -68,7 +68,7 @@ object ScaleData {
         s"max ${Stride / DocStride} copies at stride $DocStride")
     if (wanted("documents")) {
       val maxId = Tables.documents(spark, src)
-        .agg(max(col("doc_id"))).head.getLong(0)
+        .agg(max(col("doc_id"))).head().getLong(0)
       require(maxId < DocStride,
         s"source max doc_id $maxId >= stride $DocStride — is $src " +
           "already a scaled fixture? Rescale from the original testdata.")

@@ -48,7 +48,7 @@ object AsOfJoin {
     val rTagged = right.select(
       common.map(col) ++
         Seq(lit(0).as("_side"), lit(null).cast("long").as("_tb"),
-          struct(rPay.map(col): _*).as("_rpay")) ++
+          struct(rPay.map(col).toSeq: _*).as("_rpay")) ++
         lOnly.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
     val lTagged = left.select(
       common.map(col) ++
@@ -61,7 +61,7 @@ object AsOfJoin {
     val carried = rTagged.unionByName(lTagged)
       .withColumn("_rpay", last(col("_rpay"), ignoreNulls = true).over(w))
     carried.filter(col("_side") === 1)
-      .select(left.columns.map(col) ++
-        rPay.map(c => col("_rpay").getField(c).as(c)): _*)
+      .select((left.columns.map(col) ++
+        rPay.map(c => col("_rpay").getField(c).as(c))).toSeq: _*)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,12 +12,4 @@ object DebitCredit {
 
   def debit(amt: Column): Column = when(amt > 0, amt)
   def credit(amt: Column): Column = when(amt < 0, amt)
-
-  def withDebitCredit(df: DataFrame, amtCol: String): DataFrame =
-    df.withColumn("debit", debit(col(amtCol)))
-      .withColumn("credit", credit(col(amtCol)))
-
-  /** P9: null → 0 coalesce over the given columns (`fillna(0)`). */
-  def fillZero(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.fill(0.0, cols)
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
 
 /**
  * Iterative graph ranking (PageRank, Brin & Page 1998) over an edge list —

@@ -29,7 +29,7 @@ object GroupStats {
     * Guards: n < 3 and zero variance → NULL (pandas NaN, DuckDB NULL —
     * Spark's raw `skewness` would emit NaN on zero variance, which the
     * oracle hash cannot represent). */
-  def skewG1(v: Column, n: Column): Column =
+  private def skewG1(v: Column, n: Column): Column =
     when(n >= 3 && stddev_samp(v) > 0,
       skewness(v) * sqrt(n * (n - lit(1))) / (n - lit(2)))
 

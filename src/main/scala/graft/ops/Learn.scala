@@ -46,7 +46,7 @@ object Learn {
   /** Left-folded weighted sum Σ w_j·x_j — the exact association order the
     * oracle SQL writes (`a0*x0 + a1*x1 + ...`), so both engines compute
     * the identical double. */
-  def linComb(w: Seq[Double], xs: Seq[Column]): Column =
+  private def linComb(w: Seq[Double], xs: Seq[Column]): Column =
     w.zip(xs).map { case (wi, xi) => lit(wi) * xi }.reduce(_ + _)
 
   /** DuckDB `round(x, 6)` on DOUBLE, driver-side: multiply form with

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
  * Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
  * columns with typed metadata, plus batch decode / feature-extract stages.
  *
- * The Spark-side mechanics (schema, partitioning, batch shape) are real; the
- * actual media decode is STUBBED with a deterministic fake — the container
- * has no image/audio codecs. A production deployment swaps `decodeStub` for
- * a real decoder with the same signature; nothing else changes.
+ * The Spark-side mechanics (schema, partitioning, batch shape) are real.
+ * The PGM and WAV stages below really decode; for other formats, which
+ * have no codec here, `decodeBatched` stands in with a deterministic
+ * md5-derived decoder. A production deployment swaps its per-row body for
+ * a real codec; nothing else changes.
  *
  * Scale notes: payloads travel as `BinaryType` cells (Tungsten off-heap,
  * spillable); per-partition batch processing via `mapPartitions` keeps
@@ -60,20 +61,6 @@ object Multimodal {
   def withPayloadMeta(df: DataFrame, payloadCol: String): DataFrame =
     df.withColumn("n_bytes", octet_length(col(payloadCol)).cast("long"))
       .withColumn("digest", md5(col(payloadCol)))
-
-  /** STUB decode: a deterministic 4-dim "feature vector" derived from the
-    * payload bytes (length + crc32 residues — binary-safe functions only).
-    * Replace with a real decoder (same Column-in, array<double>-out shape)
-    * in production. */
-  def decodeStub(payload: Column): Column = {
-    val n = octet_length(payload).cast("double")
-    val c = crc32(payload)
-    array(
-      n / lit(1024.0),
-      (c % lit(997L)).cast("double"),
-      (c % lit(251L)).cast("double"),
-      (c % lit(127L)).cast("double"))
-  }
 
   /** Per-partition batched "decode" over a TYPED Dataset — the batch shape a
     * real decoder needs: expensive init (codec context, model load — here a
@@ -1202,23 +1189,4 @@ object Multimodal {
   def readBinaryFiles(spark: org.apache.spark.sql.SparkSession,
                       dir: String): DataFrame =
     spark.read.format("binaryFile").load(dir)
-
-  /** Declarative frame-sampling columns over a STRING payload: k evenly
-    * spaced single-character "frames", each reduced to an md5-residue
-    * feature. Character (not byte) offsets so `substr` agrees across
-    * engines; a real impl seeks+decodes frames at the same offsets.
-    * Offsets use exact double math (floor(i*(n-1)/(k-1))) — identical in
-    * any IEEE-754 engine. */
-  def frameSampleMd5(textCol: Column, k: Int): Seq[Column] = {
-    require(k >= 2, "need at least 2 frames for spaced offsets")
-    val n = length(textCol)
-    (0 until k).map { i =>
-      val off = floor(lit(i) * (n - 1).cast("double") / lit((k - 1).toDouble))
-        .cast("int") + 1
-      val ch = textCol.substr(off, lit(1))
-      when(n > 0,
-        (graft.functions.Md5Long(ch.cast("binary")) % 251L).cast("double"))
-        .otherwise(lit(0.0)).as(s"fr$i")
-    }
-  }
 }

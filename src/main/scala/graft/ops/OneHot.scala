@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
  */
 object OneHot {
 
-  def indicatorCols(c: String, vocab: Seq[String], prefix: String): Seq[Column] =
+  private def indicatorCols(c: String, vocab: Seq[String],
+                            prefix: String): Seq[Column] =
     vocab.map(v => when(col(c) === v, 1).otherwise(0).as(s"${prefix}_$v"))
 
   def withOneHot(df: DataFrame, c: String, vocab: Seq[String],

@@ -31,10 +31,10 @@ object Pivots {
     * vocabulary entry, cell = aggOf(when(pivotCol = v, valueCol)), all in
     * one groupBy(key).agg(...) pass (reference names its families
     * `mcc_freq-<code>` etc., `run.py:243`). */
-  def pivotAggOn(df: DataFrame, key: String, pivotCol: String,
-                 vocab: Seq[Any], valueCol: String,
-                 aggOf: Column => Column, prefix: String,
-                 fillZero: Boolean): DataFrame = {
+  private def pivotAggOn(df: DataFrame, key: String, pivotCol: String,
+                         vocab: Seq[Any], valueCol: String,
+                         aggOf: Column => Column, prefix: String,
+                         fillZero: Boolean): DataFrame = {
     val cells = vocab.map(v =>
       aggOf(when(col(pivotCol) === lit(v), col(valueCol)))
         .as(s"${prefix}_$v"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object RowNorm {
 
   /** A9: row-sum across a fixed column list (`df.sum(axis=1)`). */
-  def rowSum(cols: Seq[String]): Column =
+  private def rowSum(cols: Seq[String]): Column =
     cols.map(c => col(c).cast("double")).reduce(_ + _)
 
   /** A11: divide each column by the row total; all-zero rows normalize to 0,

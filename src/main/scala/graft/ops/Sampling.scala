@@ -48,7 +48,7 @@ object Sampling {
 
   /** Inverse-CDF replication count from a uniform: count = the number of
     * thresholds at or below u (CASE u < t0 -> 0, u < t1 -> 1, ..., else kMax). */
-  def inverseCdfCount(u: Column, thresholds: Seq[Double]): Column =
+  private def inverseCdfCount(u: Column, thresholds: Seq[Double]): Column =
     thresholds.zipWithIndex.foldRight(lit(thresholds.size): Column) {
       case ((t, i), elseC) => when(u < t, i).otherwise(elseC)
     }
@@ -632,7 +632,7 @@ object Sampling {
       .agg(count(lit(1)).cast("int").as("_mult"))
     val pads = df.join(broadcast(mult), key.cast("string") === col("pick_key"))
       .withColumn("_rep", explode(sequence(lit(1), col("_mult"))))
-      .select(df.columns.map(col): _*)
+      .select(df.columns.map(col).toSeq: _*)
     df.unionByName(pads)
   }
 }

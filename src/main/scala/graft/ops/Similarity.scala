@@ -48,7 +48,7 @@ object Similarity {
     * double through the join costs 8 bytes/row; recomputing it costs two
     * dot products per candidate. Every join in this file scores far more
     * pairs than it has rows, so all of them use this form. */
-  def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column)
+  private def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column)
   : Column = {
     val d = na * nb
     when(d > 0, dot(a, b) / d)
@@ -754,9 +754,10 @@ object Similarity {
     * tiebreak. |c|² is folded driver-side in the same strict
     * left-to-right order as the native DotProduct / DuckDB
     * list_dot_product. Returns (id, cid, d2). */
-  def assignToCentroids(corpus: DataFrame, cents: Array[Array[Double]])
-  : DataFrame = assignStruct(corpus, cents)
-    .select(col("id"), col("_x.cid").as("cid"), col("_x.d2").as("d2"))
+  private def assignToCentroids(corpus: DataFrame,
+                                cents: Array[Array[Double]]): DataFrame =
+    assignStruct(corpus, cents)
+      .select(col("id"), col("_x.cid").as("cid"), col("_x.d2").as("d2"))
 
   private def assignStruct(corpus: DataFrame, cents: Array[Array[Double]])
   : DataFrame = {

@@ -48,7 +48,7 @@ object TextOps {
     md5(trim(regexp_replace(lower(text), "[^a-z0-9]+", " ")))
 
   /** Stopword hit count over the token array (integer — exact cross-engine). */
-  def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
+  private def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, t => t.isin(stopwords.map(lit): _*).cast("boolean")))
 
   /** Per-language stopword lists for the heuristic language ID. Tiny
@@ -109,7 +109,7 @@ object TextOps {
     * longest run of equal neighbours. O(n log n) per row; the naive
     * per-distinct rescan (transform(array_distinct, t => count(=t))) is
     * O(distinct × total) and measured 50s vs <1s on d12 at sf0.1. */
-  def topCount(arr: Column): Column = {
+  private def topCount(arr: Column): Column = {
     val acc0 = struct(lit(null).cast("string").as("prev"),
       lit(0L).as("run"), lit(0L).as("best"))
     coalesce(aggregate(array_sort(arr), acc0,

@@ -11,7 +11,7 @@ object StateShim {
   def ensureStateStoreCoordinator(spark: SparkSession): Unit =
     spark.streams match {
       case m: org.apache.spark.sql.classic.StreamingQueryManager =>
-        m.stateStoreCoordinator; ()
+        val _ = m.stateStoreCoordinator
       case _ => ()
     }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native jaro_winkler expression: values pinned against DuckDB's

@@ -105,12 +105,14 @@ class AggWindowSpec extends SparkSpec {
     val df = rows.toDF("u", "code", "amt")
     val r = Repair(df, "u", "code", "amt", nAmt = 1, nMcc = 2)
       .orderBy("amt").collect()
-    // p = min(1, 1/3); lo = P(1/3) interp over [1,2,100], hi = P(2/3)
-    // amt=100 > hi → median 2.0; amt=1,2 within bounds unchanged
+    // p = min(1, 1/3); lo = P(1/3) = 1.667 and hi = P(2/3) = 34.667,
+    // interpolated over [1,2,100]: amt=1 < lo and amt=100 > hi → median
+    // 2.0; amt=2 within bounds unchanged
     val repairedAmts = r.map(_.getAs[Double]("amt")).toSeq
     assert(repairedAmts.contains(2.0) && !repairedAmts.contains(100.0))
-    // rare row: code → 10, amt → median of code 10 = 2.0
-    val rareRow = r.filter(_.getAs[Double]("amt") == 2.0)
+    // rare row: code → 10, amt → median of code 10 = 2.0; so every row
+    // comes out as (10, 2.0)
+    assert(repairedAmts == Seq(2.0, 2.0, 2.0, 2.0))
     assert(r.forall(_.getAs[Long]("code") == 10L))
   }
 

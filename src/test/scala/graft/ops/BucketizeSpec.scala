@@ -62,7 +62,7 @@ class BucketizeSpec extends SparkSpec {
   /** Native vs chain over `df`'s column `v` (with a null row appended), in
     * both evaluation paths. */
   private def agree(df: DataFrame, e: Seq[Double]): Unit = {
-    val rows = (df.collect().map(_.get(0)) :+ null).zipWithIndex.map {
+    val rows = (df.collect().map(_.get(0)).toSeq :+ null).zipWithIndex.map {
       case (v, i) => Row(i.toLong, v)
     }
     // an RDD scan, so the projection is not folded into a local relation

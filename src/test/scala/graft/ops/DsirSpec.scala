@@ -15,7 +15,7 @@ class DsirSpec extends SparkSpec {
     val df = Seq((1L, "a a b")).toDF("doc_id", "text")
     // features: unigrams a,a,b + bigrams "a a","a b" = 5 occurrences
     val c = Dsir.bucketCounts(df, "doc_id", "text", B)
-    assert(c.agg(sum("c")).head.getLong(0) == 5L)
+    assert(c.agg(sum("c")).head().getLong(0) == 5L)
     // "a" occurs twice and lands in ONE bucket with c >= 2
     assert(c.filter($"c" >= 2).count() >= 1)
   }

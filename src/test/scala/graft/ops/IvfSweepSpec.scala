@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** ivfProbeSweep (the e19 shared-assignment rewrite) must equal running
   * ivfKnn once per probe level, level for level — same candidate sets,

@@ -32,8 +32,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.nonEmptyListOf(Gen.listOfN(3,
       Gen.oneOf(Gen.const(0.0), Gen.choose(0.0, 50.0))))
     samples(gen, 5).foreach { rows =>
-      val df = rows.map { case List(a, b, c) => (a, b, c) }
-        .toDF("a", "b", "c")
+      val df = rows.map(r => (r(0), r(1), r(2))).toDF("a", "b", "c")
       val n = RowNorm.rowNormalize(df, Seq("a", "b", "c"))
       val sums = n.select(($"a" + $"b" + $"c").as("s")).as[Double].collect()
       sums.foreach(s => assert(math.abs(s) < 1e-9 || math.abs(s - 1) < 1e-9))
@@ -241,7 +240,6 @@ class PropertiesSpec extends SparkSpec {
   test("c07 near-dup distractor class: maxval-clamped re-uploads land " +
       "at cosine 1-eps through the real codec and straddle the 0.8 " +
       "curation boundary") {
-    import org.apache.spark.sql.expressions.Window
     val docsDf = graft.schema.Tables.documents(spark, "/root/testdata/sf0.001")
     val idims = graft.QueriesVectors.crossModalEvalDims(docsDf)
     val scored = graft.QueriesVectors.crossModalScoredDims(

@@ -40,7 +40,7 @@ class RepairSpec extends SparkSpec {
 
   test("random groups, duplicates and ties, several group sizes") {
     val rng = new scala.util.Random(7)
-    val rows = (0 until 2000).map { i =>
+    val rows = (0 until 2000).map { _ =>
       val u = rng.nextInt(23).toLong
       val c = s"t${rng.nextInt(4)}"
       // 2-dp money-like values with deliberate duplicates

@@ -35,15 +35,15 @@ class ScalarOpsSpec extends SparkSpec {
     assert(got.toSeq == Seq(0L, 1L, 47L))
   }
 
-  test("debit/credit split: zero goes to neither (null), fillZero coalesces") {
+  test("debit/credit split: zero goes to neither (null), coalesce zero-fills") {
     val df = Seq(5.0, -3.0, 0.0).toDF("amt")
-    val split = DebitCredit.withDebitCredit(df, "amt")
-    val raw = split.select($"debit", $"credit")
-      .collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+    val split = df.select(DebitCredit.debit($"amt").as("debit"),
+      DebitCredit.credit($"amt").as("credit"))
+    val raw = split.collect().map(r => (Option(r.get(0)), Option(r.get(1))))
     assert(raw.toSeq == Seq(
       (Some(5.0), None), (None, Some(-3.0)), (None, None)))
-    val filled = DebitCredit.fillZero(split, Seq("debit", "credit"))
-      .select($"debit", $"credit").as[(Double, Double)].collect()
+    val filled = split.select(coalesce($"debit", lit(0.0)),
+      coalesce($"credit", lit(0.0))).as[(Double, Double)].collect()
     assert(filled.toSeq == Seq((5.0, 0.0), (0.0, -3.0), (0.0, 0.0)))
   }
 

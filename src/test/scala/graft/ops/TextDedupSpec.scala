@@ -70,7 +70,7 @@ class TextDedupSpec extends SparkSpec {
       .orderBy("doc")
       .select("doc", "n_tokens", "n_excised", "clean_fp").collect()
     val fp = (s: String) => df.sparkSession.range(1)
-      .select(md5(lit(s))).head.getString(0)
+      .select(md5(lit(s))).head().getString(0)
     assert(out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       == Seq((1L, 6L, 0L), (2L, 9L, 6L), (3L, 6L, 0L)))
     assert(out(0).getString(3) == fp("a b c x y z")) // keeper untouched
@@ -739,21 +739,5 @@ class TextDedupSpec extends SparkSpec {
           .cast("double"))
       .as[(Double, Double, Double, Double)].collect()
     assert(got.toSeq == want.toSeq)
-  }
-
-  test("frameSampleMd5 is deterministic, char-addressed, and 0.0 on empty") {
-    val df = Seq((1L, "abcdef"), (2L, "")).toDF("doc_id", "text")
-    val r = df.select(col("doc_id") +:
-        Multimodal.frameSampleMd5($"text", 4): _*)
-      .orderBy("doc_id").collect()
-    // frames of "abcdef" sample chars at offsets 1,2,4,6 -> a,b,d,f
-    val expect = Seq("a", "b", "d", "f").map { c =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(c.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(15)
-      (java.lang.Long.parseLong(hex, 16) % 251L).toDouble
-    }
-    assert((1 to 4).map(r(0).getDouble) == expect)
-    assert((1 to 4).map(r(1).getDouble) == Seq(0.0, 0.0, 0.0, 0.0))
   }
 }

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
 /** Native VRAE latent encoder: torch LSTM gate wiring (hand-expanded),

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pins the native GRU forward pass (`model.py:57-91` semantics) against

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Submit}
 
 /** The VRAE branch end to end: the run.py:90-126 feature assembly onto the

@@ -555,7 +555,7 @@ class EventStreamSpec extends SparkSpec {
       // query "click" exactly like the batch sketch: min over its 4 buckets
       val est = (0 until 4).map { j =>
         val b = spark.range(1).select(pmod(graft.ops.Dedup.md5Hash(
-          lit("click"), lit("cms" + j)), lit(64L))).head.getLong(0)
+          lit("click"), lit("cms" + j)), lit(64L))).head().getLong(0)
         counters.getOrElse((j, b), 0L)
       }.min
       assert(est == 3L) // 3 clicks across both micro-batches
@@ -952,8 +952,8 @@ class EventStreamSpec extends SparkSpec {
             batch, corpusTower, bits0), bid)
       }.start()
     try {
-      in.addData(arrAll.take(arrAll.length / 2): _*); q.processAllAvailable()
-      in.addData(arrAll.drop(arrAll.length / 2): _*); q.processAllAvailable()
+      in.addData(arrAll.take(arrAll.length / 2).toSeq: _*); q.processAllAvailable()
+      in.addData(arrAll.drop(arrAll.length / 2).toSeq: _*); q.processAllAvailable()
     } finally q.stop()
     val streamed = spark.read.parquet(dir.getPath)
     val arrDf = arrAll.toSeq
